@@ -3,7 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // median-of-N timing (default 3): single-shot numbers on a contended
     // host showed ±2× run-to-run noise (BENCH_NOTES), which can't tell a
     // real 2× regression from scheduling jitter; the median of 3 runs plus

@@ -41,7 +41,8 @@ object Verify {
         require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
         SparkEntry.queries.view.filterKeys(names).toMap
       } else SparkEntry.queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Codegen'd float-vector dot product accumulating in DOUBLE, strict index
   * order.
@@ -25,55 +24,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * holds for arbitrary user vectors, not just the equal-length embedding
   * columns the similarity paths feed it.
   */
-case class DotF(left: Expression, right: Expression) extends BinaryExpression {
+case class DotF(left: Expression, right: Expression)
+    extends VectorFold[Double](FloatType, FloatType, DoubleType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"DotF requires two array<float> inputs, got ${left.dataType} and ${right.dataType}")
-  }
+  protected def term(a: ArrayData, b: ArrayData, i: Int): Double =
+    a.getFloat(i).toDouble * b.getFloat(i).toDouble
 
-  override def dataType: DataType = DoubleType
-
-  // null on ragged inputs (zip_with parity), not only on null children
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  protected def javaStep(ctx: CodegenContext, s: String, a: String, b: String, i: String): String =
+    s"$s += (double) $a.getFloat($i) * (double) $b.getFloat($i);"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotF = copy(newLeft, newRight)

@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Codegen'd float×double dot product accumulating in DOUBLE, strict index
   * order — the mixed-precision sibling of [[DotF]] for projecting a float
@@ -28,53 +27,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * (embeddings/hyperplane/q8 arrays are built element-non-null); a new
   * caller with nullable elements must null-filter first.
   */
-case class DotFD(left: Expression, right: Expression) extends BinaryExpression {
+case class DotFD(left: Expression, right: Expression)
+    extends VectorFold[Double](FloatType, DoubleType, DoubleType) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"DotFD requires (array<float>, array<double>) inputs, got $l and $r")
-    }
+  protected def term(a: ArrayData, b: ArrayData, i: Int): Double =
+    a.getFloat(i).toDouble * b.getDouble(i)
 
-  override def dataType: DataType = DoubleType
-
-  // null on ragged inputs (zip_with parity), not only on null children
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += a.getFloat(i).toDouble * b.getDouble(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += (double) $a.getFloat($i) * $b.getDouble($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  protected def javaStep(ctx: CodegenContext, s: String, a: String, b: String, i: String): String =
+    s"$s += (double) $a.getFloat($i) * $b.getDouble($i);"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotFD = copy(newLeft, newRight)

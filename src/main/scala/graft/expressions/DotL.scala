@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Codegen'd exact BIGINT dot product, strict index order — the integer
   * sibling of [[DotF]] for the int8-quantized approximate scoring pass
@@ -19,55 +18,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * parity), so the quantized scores and everything the oracle replicates
   * are unchanged.
   */
-case class DotL(left: Expression, right: Expression) extends BinaryExpression {
+case class DotL(left: Expression, right: Expression)
+    extends VectorFold[Long](LongType, LongType, LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"DotL requires two array<bigint> inputs, got ${left.dataType} and ${right.dataType}")
-  }
+  protected def term(a: ArrayData, b: ArrayData, i: Int): Long =
+    a.getLong(i) * b.getLong(i)
 
-  override def dataType: DataType = LongType
-
-  // null on ragged inputs (zip_with parity), not only on null children
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      s += a.getLong(i) * b.getLong(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  protected def javaStep(ctx: CodegenContext, s: String, a: String, b: String, i: String): String =
+    s"$s += $a.getLong($i) * $b.getLong($i);"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotL = copy(newLeft, newRight)

@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Codegen'd squared-L2 distance between two float vectors — the PQ/Lloyd
   * assignment kernel, sibling of [[DotF]].
@@ -23,58 +22,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * downstream: every Lloyd assignment, min_by tie, and recall gate sees
   * the same distances to the last bit.
   */
-case class L2F(left: Expression, right: Expression) extends BinaryExpression {
+case class L2F(left: Expression, right: Expression)
+    extends VectorFold[Double](FloatType, FloatType, DoubleType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"L2F requires two array<float> inputs, got ${left.dataType} and ${right.dataType}")
+  protected def term(a: ArrayData, b: ArrayData, i: Int): Double = {
+    val d = a.getFloat(i) - b.getFloat(i)
+    (d * d).toDouble
   }
 
-  override def dataType: DataType = DoubleType
-
-  // null on ragged inputs (zip_with parity), not only on null children
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val d = a.getFloat(i) - b.getFloat(i)
-      s += (d * d).toDouble
-      i += 1
-    }
-    s
+  protected def javaStep(ctx: CodegenContext, s: String, a: String, b: String, i: String): String = {
+    val d = ctx.freshName("d")
+    s"""float $d = $a.getFloat($i) - $b.getFloat($i);
+       |    $s += (double) ($d * $d);""".stripMargin
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    float $d = $a.getFloat($i) - $b.getFloat($i);
-         |    $s += (double) ($d * $d);
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2F = copy(newLeft, newRight)

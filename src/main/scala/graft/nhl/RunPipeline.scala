@@ -21,11 +21,12 @@ object RunPipeline {
     val Array(rawRoot, silverRoot) = args.take(2)
     val runDate = args.lift(2).getOrElse(java.time.LocalDate.now().toString)
     val reusedSession = SparkSession.getActiveSession.isDefined
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName("nhl-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")

@@ -53,6 +53,109 @@ object Dedup {
     shingleSets(df, textCol, idCol, n)
       .select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
 
+  /** The candidate table of a banded / chunked self-join
+    * ([[minhashLshPairs]], [[chunkNearDupPairs]], [[simhashPairs]]),
+    * materialized once: both join sides read it, and without the cut each
+    * side re-ran the signature aggregate + banding at execution (r14
+    * before-plan: the sigs exchange appeared twice, one copy per join
+    * side).
+    *
+    * Uncapped (`cap == Long.MaxValue`, the exact face): repartitioned +
+    * sorted on `keys` BEFORE the checkpoint, so that the self-join can
+    * run with no exchange and no sort on either side (r15). Under AQE the
+    * checkpoint's scan reports UnknownPartitioning: with broadcasts
+    * disabled at sf0.001 the final plans count the same shuffle stages
+    * with or without the repartition, so the saving is unconfirmed.
+    *
+    * Capped: buckets holding more than `cap` rows are dropped LOUDLY
+    * (counted, one stderr line naming `label`, the bucket kind `keys.head`
+    * and its `max<Kind>Freq` parameter); pairs colliding only in dropped
+    * buckets are missed — explicitly reduced recall, not silent
+    * truncation.
+    *
+    * Cap-path evaluation semantics: a cap makes the CALL eager — the
+    * candidate table localCheckpoints and the hot-bucket count runs as
+    * Spark jobs at DataFrame-CONSTRUCTION time (the stderr warning fires
+    * then too), because the drop decision must be data-driven before the
+    * lazy output plan is built. The two checkpointed frames stay pinned
+    * in block-manager storage for the session (the same accepted lifetime
+    * as [[shingleSets]]'s checkpoint — the output plan references them,
+    * so they cannot be unpersisted here); long-lived sessions looping
+    * over many capped calls should `spark.catalog.clearCache()`/unpersist
+    * between iterations.
+    */
+  private def bucketed(frame: DataFrame, keys: Seq[String], cap: Long,
+                       label: String): DataFrame =
+    if (cap == Long.MaxValue) {
+      frame.repartition(keys.map(col): _*)
+        .sortWithinPartitions(keys.map(col): _*)
+        .localCheckpoint(false)
+    } else {
+      val ck = frame.localCheckpoint(false)
+      val hot = ck.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") > cap)
+        .localCheckpoint(false)
+      val nHot = hot.count()
+      val kind = keys.head
+      if (nHot > 0)
+        System.err.println(s"[graft] $label: dropped $nHot hot $kind bucket(s) exceeding " +
+          s"max${kind.capitalize}Freq=$cap — pairs colliding only in dropped buckets are missed")
+      ck.join(hot.select(keys.map(col): _*), keys, "left_anti")
+    }
+
+  /** MinHash bands of each unit's shingle set `sh` (unit = `keyCols`): k
+    * seeded hashes per exploded shingle as flat columns (codegen'd, no
+    * per-element lambdas), min per unit → the signature slots, then one
+    * (band, bh) row per r-slot signature slice.
+    */
+  private def minhashBands(sets: DataFrame, keyCols: Seq[String], k: Int,
+                           bands: Int): DataFrame = {
+    require(k % bands == 0, "bands must divide k")
+    val r = k / bands
+    val keys = keyCols.map(col)
+    val sigs = sets.select(keys :+ explode(col("sh")).as("shingle"): _*)
+      .select(keys ++
+        (0 until k).map(i => xxhash64(concat(col("shingle"), lit(s"#$i"))).as(s"h$i")): _*)
+      .groupBy(keys: _*)
+      .agg(min(col("h0")).as("m0"), (1 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*)
+    sigs.select(keys :+ explode(array((0 until bands).map { j =>
+      struct(lit(j).as("band"),
+        xxhash64((j * r until (j + 1) * r).map(i => col(s"m$i")): _*).as("bh"))
+    }: _*)).as("bb"): _*)
+      .select(keys ++ Seq(col("bb.band"), col("bb.bh")): _*)
+  }
+
+  /** Self-join of a candidate table on `joinKeys`: each side renames `id`
+    * and every `sideCols` source column (source → base name) with an
+    * `_a` / `_b` suffix; each unordered pair is kept once, id_a < id_b.
+    */
+  private def selfPairs(frame: DataFrame, joinKeys: Seq[String],
+                        sideCols: (String, String)*): DataFrame = {
+    def side(s: String) = frame.select(col("id").as(s"id_$s") +:
+      sideCols.map { case (c, base) => col(c).as(s"${base}_$s") } ++: joinKeys.map(col): _*)
+    side("a").join(side("b"), joinKeys).filter(col("id_a") < col("id_b"))
+  }
+
+  /** Exact set-Jaccard verification of candidate pairs: attach each
+    * side's shingle array `sh` (and `carry` columns as `<c>_a`/`<c>_b`)
+    * from `sets` on the unit `keys`, keep pairs at or above `threshold`.
+    * Output: keys_a, keys_b, jaccard, then the carried columns.
+    */
+  private def jaccardVerify(candidates: DataFrame, sets: DataFrame, keys: Seq[String],
+                            carry: Seq[String], threshold: Double): DataFrame = {
+    def sfx(s: String) = keys.map(k => s"${k}_$s")
+    def side(s: String) = sets.select(((keys :+ "sh") ++ carry).map(c => col(c).as(s"${c}_$s")): _*)
+    candidates
+      .join(side("a"), sfx("a"))
+      .join(side("b"), sfx("b"))
+      .withColumn("jaccard",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))))
+      .filter(col("jaccard") >= threshold)
+      .select((sfx("a") ++ sfx("b") ++ ("jaccard" +:
+        carry.flatMap(c => Seq(s"${c}_a", s"${c}_b")))).map(col): _*)
+  }
+
   /** N-gram Jaccard near-dup pairs via shared-shingle join: candidates are
     * pairs sharing ≥1 shingle; Jaccard computed from co-occurrence counts
     * (|A∩B| from the join, |A∪B| = |A|+|B|−|A∩B|) — integer arithmetic, no
@@ -184,10 +287,7 @@ object Dedup {
     // broadcast — a doc-count-sized broadcast, which is exactly the thing
     // that cannot exist at 100 TB corpus scale (and locally cost two more
     // joins, two aggregates, and two checkpoint scans per execution).
-    val a = ix.select(col("id").as("id_a"), col("set_size").as("sz_a"), col("shingle"))
-    val b = ix.select(col("id").as("id_b"), col("set_size").as("sz_b"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
+    selfPairs(ix, Seq("shingle"), "set_size" -> "sz")
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("co"),
         min(col("sz_a")).as("n_a"), min(col("sz_b")).as("n_b"))
@@ -287,26 +387,13 @@ object Dedup {
       // only shrinks the shuffle. dfreq>maxDocFreq is the semantic cap.
       .filter(col("dfreq") > 1 && col("dfreq") <= maxDocFreq)
       .select("id", "set_size", "shingle")
-    val candidates = prefix.select(col("id").as("id_a"), col("set_size").as("n_a"), col("shingle"))
-      .join(prefix.select(col("id").as("id_b"), col("set_size").as("n_b"), col("shingle")),
-        Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
+    val candidates = selfPairs(prefix, Seq("shingle"), "set_size" -> "n")
       // length filter: J ≥ t needs t·max(|a|,|b|) ≤ min(|a|,|b|); the same
       // 1e-9 slack keeps exact-boundary sizes (t=0.8, 4-vs-5) in play
       .filter(lit(threshold) * greatest(col("n_a"), col("n_b")) - lit(1e-9) <=
         least(col("n_a"), col("n_b")))
       .select("id_a", "id_b").distinct()
-    candidates
-      .join(sets.select(col("id").as("id_a") +: col("sh").as("sh_a") +:
-        carry.map(c => col(c).as(s"${c}_a")): _*), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b") +: col("sh").as("sh_b") +:
-        carry.map(c => col(c).as(s"${c}_b")): _*), Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(("id_a" +: "id_b" +: "jaccard" +:
-        carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col): _*)
+    jaccardVerify(candidates, sets, Seq("id"), carry, threshold)
   }
 
   /** MinHash signature as a single Column (k seeded slots over a shingle
@@ -351,16 +438,8 @@ object Dedup {
     * a corpus whose legitimate clusters are BIGGER raises g_max
     * deliberately and accepts the larger per-bucket mass.
     *
-    * Cap-path evaluation semantics: setting `maxBandFreq` makes THIS CALL
-    * eager — the banded table localCheckpoints and the hot-bucket count
-    * runs as Spark jobs at DataFrame-CONSTRUCTION time (the stderr warning
-    * fires then too), because the drop decision must be data-driven before
-    * the lazy output plan is built. The two checkpointed frames stay
-    * pinned in block-manager storage for the session (the same accepted
-    * lifetime as [[shingleSets]]'s checkpoint below — the output plan
-    * references them, so they cannot be unpersisted here); long-lived
-    * sessions looping over many capped calls should `spark.catalog
-    * .clearCache()`/unpersist between iterations.
+    * Setting `maxBandFreq` makes this call eager; see [[bucketed]] for the
+    * cap path's evaluation semantics.
     */
   /** The production `maxBandFreq`/`maxChunkFreq` default: max(4·g_max,
     * √(2P)) with residual legitimate cluster size g_max = 10³ (post-
@@ -373,66 +452,15 @@ object Dedup {
                       n: Int = 3, k: Int = 32, bands: Int = 8,
                       threshold: Double = 0.8,
                       maxBandFreq: Long = Long.MaxValue): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     // materialized once (feeds signature hashing AND both verification
     // joins); localCheckpoint for the same no-leak reason as
     // [[ngramJaccardPairs]]'s index
     val sets = shingleSets(df, textCol, idCol, n).localCheckpoint(false)
-
-    // k seeded hashes per exploded shingle as flat columns (codegen'd, no
-    // per-element lambdas), then min per doc → the signature slots
-    val hashed = sets.select(col("id"), explode(col("sh")).as("shingle"))
-      .select(col("id") +:
-        (0 until k).map(i => xxhash64(concat(col("shingle"), lit(s"#$i"))).as(s"h$i")): _*)
-    val sigs = hashed.groupBy("id")
-      .agg(min(col("h0")).as("m0"), (1 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*)
-
-    // banding: one (band, bandHash) per signature slice
-    val banded0 = sigs.select(col("id"), explode(array((0 until bands).map { j =>
-      struct(lit(j).as("band"),
-        xxhash64((j * r until (j + 1) * r).map(i => col(s"m$i")): _*).as("bh"))
-    }: _*)).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bh"))
-    // checkpointed on BOTH paths: the two sides of the band-keyed
-    // self-join read this frame, and without the cut each side re-ran the
-    // k-hash signature aggregate + banding at execution (r14 before-plan:
-    // the sigs exchange appeared twice, one copy per join side). r15: the
-    // uncapped path repartitions + sorts on the band key BEFORE the
-    // checkpoint — localCheckpoint preserves partitioning/ordering, so
-    // the self-join runs with no exchange and no sort on either side
-    // (one exchange of the banded table replaces two).
-    val banded = if (maxBandFreq == Long.MaxValue) {
-      banded0.repartition(col("band"), col("bh"))
-        .sortWithinPartitions("band", "bh")
-        .localCheckpoint(false)
-    } else {
-      val ck = banded0.localCheckpoint(false)
-      val hot = ck.groupBy("band", "bh").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > maxBandFreq)
-        .localCheckpoint(false)
-      val nHot = hot.count()
-      if (nHot > 0)
-        System.err.println(s"[graft] minhashLshPairs: dropped $nHot hot band " +
-          s"bucket(s) exceeding maxBandFreq=$maxBandFreq — pairs colliding " +
-          "only in dropped buckets are missed")
-      ck.join(hot.select("band", "bh"), Seq("band", "bh"), "left_anti")
-    }
-
-    val candidates = banded.select(col("id").as("id_a"), col("band"), col("bh"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bh")), Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-
+    val banded = bucketed(minhashBands(sets, Seq("id"), k, bands), Seq("band", "bh"),
+      maxBandFreq, "minhashLshPairs")
+    val candidates = selfPairs(banded, Seq("band", "bh")).select("id_a", "id_b").distinct()
     // exact verification on the candidate pairs only
-    candidates
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardVerify(candidates, sets, Seq("id"), Nil, threshold)
   }
 
   /** Incremental near-dup check: Jaccard pairs BETWEEN a new batch and the
@@ -688,18 +716,17 @@ object Dedup {
     * candidate mass tracks true near-dup density like every banding join
     * here; `maxBandFreq` is the [[simhashPairs]]-style hot-bucket cap
     * (buckets over the cap are dropped and counted out loud; pairs
-    * colliding only in dropped buckets are missed). Production sizing and
-    * the cap path's eager-evaluation semantics are exactly
-    * [[minhashLshPairs]]'s — [[RecommendedMaxBandFreq]] applies here too
-    * (g_max = the largest legitimate repeated-CHUNK group, e.g. a license
-    * paragraph's residual spread after [[chunkDupGroups]] removal).
+    * colliding only in dropped buckets are missed). The cap path's
+    * eager-evaluation semantics are [[bucketed]]'s; production sizing is
+    * exactly [[minhashLshPairs]]'s — [[RecommendedMaxBandFreq]] applies
+    * here too (g_max = the largest legitimate repeated-CHUNK group, e.g.
+    * a license paragraph's residual spread after [[chunkDupGroups]]
+    * removal).
     */
   def chunkNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                         chunkSize: Int, n: Int = 3, k: Int = 32,
                         bands: Int = 16, threshold: Double = 0.8,
                         maxBandFreq: Long = Long.MaxValue): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     // chunk shingle sets feed signature hashing AND both verification
     // joins; localCheckpoint for the same no-leak reason as
     // [[ngramJaccardPairs]]'s index
@@ -711,54 +738,27 @@ object Dedup {
       .select(col("id"), col("pos"),
         TextOps.shinglesFromTokens(TextOps.tokens(col("chunk")), n).as("sh"))
       .localCheckpoint(false)
-    val hashed = chunks.select(col("id"), col("pos"), explode(col("sh")).as("shingle"))
-      .select(col("id") +: col("pos") +:
-        (0 until k).map(i => xxhash64(concat(col("shingle"), lit(s"#$i"))).as(s"h$i")): _*)
-    val sigs = hashed.groupBy("id", "pos")
-      .agg(min(col("h0")).as("m0"), (1 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*)
-    val banded0 = sigs.select(col("id"), col("pos"), explode(array((0 until bands).map { j =>
-        struct(lit(j).as("band"),
-          xxhash64((j * r until (j + 1) * r).map(i => col(s"m$i")): _*).as("bh"))
-      }: _*)).as("bb"))
-      .select(col("id"), col("pos"), col("bb.band"), col("bb.bh"))
-    // checkpointed on BOTH paths: the two sides of the band-keyed
-    // self-join read this frame, and without the cut each side re-ran the
-    // k-hash signature aggregate + banding at execution (r14 before-plan:
-    // the sigs exchange appeared twice, one copy per join side). r15:
-    // uncapped path pre-partitioned + sorted on the band key, so the
-    // self-join is exchange- and sort-free (see [[minhashLshPairs]]).
-    val banded = if (maxBandFreq == Long.MaxValue) {
-      banded0.repartition(col("band"), col("bh"))
-        .sortWithinPartitions("band", "bh")
-        .localCheckpoint(false)
-    } else {
-      val ck = banded0.localCheckpoint(false)
-      val hot = ck.groupBy("band", "bh").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > maxBandFreq)
-        .localCheckpoint(false)
-      val nHot = hot.count()
-      if (nHot > 0)
-        System.err.println(s"[graft] chunkNearDupPairs: dropped $nHot hot band " +
-          s"bucket(s) exceeding maxBandFreq=$maxBandFreq — pairs colliding " +
-          "only in dropped buckets are missed")
-      ck.join(hot.select("band", "bh"), Seq("band", "bh"), "left_anti")
-    }
-    val candidates = banded
-      .select(col("id").as("id_a"), col("pos").as("pos_a"), col("band"), col("bh"))
-      .join(banded.select(col("id").as("id_b"), col("pos").as("pos_b"),
-        col("band"), col("bh")), Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
+    val banded = bucketed(minhashBands(chunks, Seq("id", "pos"), k, bands),
+      Seq("band", "bh"), maxBandFreq, "chunkNearDupPairs")
+    val candidates = selfPairs(banded, Seq("band", "bh"), "pos" -> "pos")
       .select("id_a", "pos_a", "id_b", "pos_b").distinct()
-    candidates
-      .join(chunks.select(col("id").as("id_a"), col("pos").as("pos_a"),
-        col("sh").as("sh_a")), Seq("id_a", "pos_a"))
-      .join(chunks.select(col("id").as("id_b"), col("pos").as("pos_b"),
-        col("sh").as("sh_b")), Seq("id_b", "pos_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "pos_a", "id_b", "pos_b", "jaccard")
+    jaccardVerify(candidates, chunks, Seq("id", "pos"), Nil, threshold)
+  }
+
+  /** (id, token, tf) with tf the count of each n-token gram WITH
+    * multiplicity (unlike TextOps.shingles, which dedups — multiplicity is
+    * the point of the vector-space model); one shuffle on (id, token). n > 1
+    * is the degenerate-vocabulary knob: on a corpus whose unigram vocab is
+    * tiny every doc shares tokens with every doc and the inverted index
+    * goes quadratic; grams re-sparsify it.
+    */
+  private def termFreqs(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
+    require(n >= 1, "n-gram width must be >= 1")
+    val toks = TextOps.tokens(col(textCol))
+    val grams = if (n == 1) toks else TextOps.gramsFromTokens(toks, n)
+    df.select(col(idCol).as("id"), explode(grams).as("token"))
+      .groupBy("id", "token").agg(count(lit(1)).as("tf"))
+      .localCheckpoint(false)
   }
 
   /** 64-bit SimHash over the distinct token set (weight 1 per token): for
@@ -792,20 +792,7 @@ object Dedup {
   def tokenCosinePairs(df: DataFrame, textCol: String, idCol: String,
                        n: Int = 1, threshold: Double = 0.8,
                        maxDocFreq: Long = Long.MaxValue): DataFrame = {
-    require(n >= 1, "n-gram width must be >= 1")
-    // unit = n-token gram WITH multiplicity (unlike TextOps.shingles, which
-    // dedups — multiplicity is the point of the vector-space model). n > 1
-    // is the degenerate-vocabulary knob: on a corpus whose unigram vocab is
-    // tiny every doc shares tokens with every doc and the inverted index
-    // goes quadratic; grams re-sparsify it.
-    val toks = TextOps.tokens(col(textCol))
-    val grams =
-      if (n == 1) toks
-      else TextOps.gramsFromTokens(toks, n)
-    // (id, token, tf): one shuffle on (id, token)
-    val tf0 = df.select(col(idCol).as("id"), explode(grams).as("token"))
-      .groupBy("id", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val tf0 = termFreqs(df, textCol, idCol, n)
     val tf =
       if (maxDocFreq == Long.MaxValue) tf0
       else {
@@ -883,15 +870,8 @@ object Dedup {
     */
   def tokenCosinePrefixPairs(df: DataFrame, textCol: String, idCol: String,
                              n: Int = 1, threshold: Double = 0.8): DataFrame = {
-    require(n >= 1, "n-gram width must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val toks = TextOps.tokens(col(textCol))
-    val grams =
-      if (n == 1) toks
-      else TextOps.gramsFromTokens(toks, n)
-    val tf = df.select(col(idCol).as("id"), explode(grams).as("token"))
-      .groupBy("id", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val tf = termFreqs(df, textCol, idCol, n)
     // per-doc verify payload built FIRST (r15): its aggregation already
     // computes sum(tf²), so it doubles as the norms table — the separate
     // norms aggregate over tf (one more full pass + exchange) is gone, and
@@ -1178,14 +1158,14 @@ object Dedup {
     * approximate: a pair colliding ONLY in dropped buckets is missed, so
     * the guarantee degrades from "all pairs within Hamming ≤ h" to "all
     * pairs agreeing on ≥1 surviving chunk". Default = no cap (exact).
+    * The cap path is eager — see [[bucketed]].
     */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3,
                    maxChunkFreq: Long = Long.MaxValue): DataFrame = {
     // r15: the materialization point moves from the SimHash table to the
-    // CHUNKED table, repartitioned + sorted on the chunk key — both sides
-    // of the self-join then read pre-partitioned, pre-sorted blocks (no
-    // exchange, no sort, r14 shape: exchange+sort per side), and the
+    // CHUNKED table ([[bucketed]]: repartitioned + sorted on the chunk
+    // key), and the
     // tokenize + 64-bit vote aggregate still runs exactly once per
     // execution (it feeds only this frame, so its separate checkpoint
     // was a redundant barrier).
@@ -1196,27 +1176,8 @@ object Dedup {
           shiftright(col("sim"), c * 16).bitwiseAND(lit(0xFFFFL)).as("cv"))
       }: _*)).as("cc"))
       .select(col("id"), col("sim"), col("cc.chunk"), col("cc.cv"))
-    val chunked = if (maxChunkFreq == Long.MaxValue) {
-      chunked0.repartition(col("chunk"), col("cv"))
-        .sortWithinPartitions("chunk", "cv")
-        .localCheckpoint(false)
-    } else {
-      // checkpoint once: feeds the frequency count AND the anti-join below
-      val ck = chunked0.localCheckpoint(false)
-      val hot = ck.groupBy("chunk", "cv").agg(count(lit(1)).as("n"))
-        .filter(col("n") > maxChunkFreq)
-        .localCheckpoint(false)
-      val nHot = hot.count()
-      if (nHot > 0)
-        System.err.println(s"[graft] simhashPairs: dropped $nHot hot chunk " +
-          s"bucket(s) exceeding maxChunkFreq=$maxChunkFreq — pairs colliding " +
-          "only in dropped buckets are missed")
-      ck.join(hot.select("chunk", "cv"), Seq("chunk", "cv"), "left_anti")
-    }
-    val a = chunked.select(col("id").as("id_a"), col("sim").as("sim_a"), col("chunk"), col("cv"))
-    val b = chunked.select(col("id").as("id_b"), col("sim").as("sim_b"), col("chunk"), col("cv"))
-    a.join(b, Seq("chunk", "cv"))
-      .filter(col("id_a") < col("id_b"))
+    val chunked = bucketed(chunked0, Seq("chunk", "cv"), maxChunkFreq, "simhashPairs")
+    selfPairs(chunked, Seq("chunk", "cv"), "sim" -> "sim")
       .select("id_a", "id_b", "sim_a", "sim_b").distinct()
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
       .filter(col("hamming") <= maxHamming)

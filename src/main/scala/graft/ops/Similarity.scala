@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expressions.DotF
+import graft.expressions.{DotF, DotFD, DotL, L2F}
 
 /** Embedding similarity search: brute-force cosine top-k as the exactness
   * baseline, random-hyperplane LSH bucketing as the scale path.
@@ -24,11 +25,12 @@ import graft.expressions.DotF
   */
 object Similarity {
 
+  /** A native two-vector kernel ([[graft.expressions.VectorFold]]) as a Column. */
+  private def kernel(k: (Expression, Expression) => Expression, a: Column, b: Column): Column =
+    GraftSqlBridge.column(k(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
   /** Index-ordered double dot product of two float vectors (codegen'd). */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(DotF(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-  }
+  def dot(a: Column, b: Column): Column = kernel(DotF, a, b)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -37,11 +39,7 @@ object Similarity {
     * `aggregate(zip_with(a,b,(x,y)=>(x-y)*(x-y)), 0.0, _+_)` fold it
     * replaced in the PQ/Lloyd kernels — see L2F's numeric contract.
     */
-  def l2sq(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(graft.expressions.L2F(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-  }
+  def l2sq(a: Column, b: Column): Column = kernel(L2F, a, b)
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
@@ -166,12 +164,8 @@ object Similarity {
     // codegen with BIT-IDENTICAL results (float→double widening then the
     // same index-ordered IEEE sum), so bucket ids and every oracle that
     // replicates them term-by-term are unchanged.
-    import org.apache.spark.sql.GraftSqlBridge
     val bucket = planes.zipWithIndex.map { case (p, i) =>
-      val planeLit = array(p.map(lit): _*).cast("array<double>")
-      val d = GraftSqlBridge.column(graft.expressions.DotFD(
-        GraftSqlBridge.expression(col("embedding")),
-        GraftSqlBridge.expression(planeLit)))
+      val d = kernel(DotFD, col("embedding"), array(p.map(lit): _*).cast("array<double>"))
       shiftleft(when(d >= 0, lit(1L)).otherwise(lit(0L)), i)
     }.reduce(_ bitwiseOR _)
     df.withColumn("bucket", bucket)
@@ -747,12 +741,7 @@ object Similarity {
       // ANN surface); the aggregate(zip_with(...)) fold it replaces is
       // interpreted, and DotL is value-identical (64-bit multiply-add,
       // unreachable overflow at |q8| ≤ 127)
-      .withColumn("dq", {
-        import org.apache.spark.sql.GraftSqlBridge
-        GraftSqlBridge.column(graft.expressions.DotL(
-          GraftSqlBridge.expression(col("qa")),
-          GraftSqlBridge.expression(col("qb"))))
-      })
+      .withColumn("dq", kernel(DotL, col("qa"), col("qb")))
       .withColumn("approx", col("dq").cast("double") * col("fa") * col("fb"))
       .withColumn("arank", row_number().over(wApprox))
       .filter(col("arank") <= k * oversample)

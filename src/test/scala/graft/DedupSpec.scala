@@ -355,6 +355,12 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.chunkNearDupPairs(hot, "text", "doc_id", chunkSize = 32).count() === 10)
     assert(Dedup.chunkNearDupPairs(hot, "text", "doc_id", chunkSize = 32,
       maxBandFreq = 4).count() === 0)
+    // a cap at or above every bucket's size (5) returns exactly the uncapped pairs
+    val uncapped = Dedup.chunkNearDupPairs(hot, "text", "doc_id", chunkSize = 32)
+      .as[(Long, Int, Long, Int, Double)].collect().toSet
+    val cappedHigh = Dedup.chunkNearDupPairs(hot, "text", "doc_id", chunkSize = 32,
+      maxBandFreq = 5).as[(Long, Int, Long, Int, Double)].collect().toSet
+    assert(cappedHigh === uncapped)
   }
 
   test("stripIntraDocRepeats: first block occurrence survives, order kept, counts exact") {

@@ -75,11 +75,19 @@ class ExtensionsSpec extends SparkTestBase {
     assert(same.getDouble(0) === 12.0)
   }
 
-  test("dot_f from SQL type-checks its inputs") {
+  test("every vector kernel type-checks its SQL inputs, naming the kernel") {
     GraftExtensions.install(spark)
-    val e = intercept[Exception](spark.sql("SELECT dot_f(array(1, 2), array(3, 4))").collect())
-    assert(e.getMessage.toLowerCase.contains("dotf") ||
-      e.getMessage.toLowerCase.contains("array<float>"))
+    // each call passes the wrong element type; the failure names the
+    // kernel and the input types it requires
+    Seq(
+      "dot_f(array(1, 2), array(3, 4))" -> "DotF requires two array<float> inputs",
+      "dot_fd(array(1, 2), array(3, 4))" -> "DotFD requires (array<float>, array<double>) inputs",
+      "dot_l(array(1.0D), array(2.0D))" -> "DotL requires two array<bigint> inputs",
+      "l2_f(array(1, 2), array(3, 4))" -> "L2F requires two array<float> inputs"
+    ).foreach { case (call, want) =>
+      val e = intercept[Exception](spark.sql(s"SELECT $call").collect())
+      assert(e.getMessage.contains(want), s"$call: ${e.getMessage}")
+    }
   }
 
   test("dot_fd matches the interpreted cast+zip_with fold bit-for-bit (LSH plane projection)") {
@@ -105,6 +113,13 @@ class ExtensionsSpec extends SparkTestBase {
     val ragged = Seq((Array(1.0f), Array(1.0, 2.0))).toDF("a", "b")
       .select(expr("dot_fd(a, b)").as("d")).collect()(0)
     assert(ragged.isNullAt(0))
+    // interpreted path: literal inputs are constant-folded through eval
+    val lit2 = spark.sql(
+      "SELECT dot_fd(array(CAST(1 AS FLOAT)), array(CAST(1 AS DOUBLE), CAST(2 AS DOUBLE))) AS r, " +
+        "dot_fd(array(CAST(3 AS FLOAT), CAST(0.5 AS FLOAT)), array(0.25D, 4.0D)) AS d")
+      .collect()(0)
+    assert(lit2.isNullAt(0))
+    assert(lit2.getDouble(1) === 2.75)
   }
 
   test("dot_l matches the interpreted zip_with fold exactly (int8 quantized dot)") {
@@ -124,5 +139,12 @@ class ExtensionsSpec extends SparkTestBase {
     val ragged = Seq((Array(1L), Array(1L, 2L))).toDF("a", "b")
       .select(expr("dot_l(a, b)").as("d")).collect()(0)
     assert(ragged.isNullAt(0))
+    // interpreted path: literal inputs are constant-folded through eval
+    val lit2 = spark.sql(
+      "SELECT dot_l(array(1L), array(1L, 2L)) AS r, " +
+        "dot_l(array(2L, -3L), array(4L, 5L)) AS d")
+      .collect()(0)
+    assert(lit2.isNullAt(0))
+    assert(lit2.getLong(1) === -7L)
   }
 }

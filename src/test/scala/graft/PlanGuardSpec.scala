@@ -80,6 +80,20 @@ class PlanGuardSpec extends SparkTestBase {
         s"groupBy to reuse one hash partitioning, found $exchanges exchanges:\n$plan")
   }
 
+  test("banded self-joins (minhash, chunk, simhash) keep one shuffle stage") {
+    // the count at which these plans stand: at sf0.001 AQE broadcasts the
+    // band/chunk self-join and the verify joins, and the one shuffle left
+    // is the candidate-pair distinct. An added exchange anywhere on the
+    // candidate or verify path shows up as a second stage. (The pin does
+    // not see whether the candidate table is pre-partitioned: the
+    // checkpoint scan reports UnknownPartitioning either way.)
+    Seq("dd_minhash_lsh", "dd_chunk_neardup", "dd_simhash").foreach { n =>
+      val plan = finalQe(n).executedPlan
+      val exchanges = countShuffleStages(plan)
+      assert(exchanges === 1, s"$n: expected 1 shuffle stage, found $exchanges:\n$plan")
+    }
+  }
+
   test("ta_pack_bins: shard window and (shard,bin) window share ONE exchange") {
     // hashpartitioning(shard) clusters every (shard, bin_id) group, so the
     // refined window must add only a local sort — a second exchange here
