@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expressions.{DotF, DotFD, DotL, L2F}
+import graft.expressions.{DotF, DotFD, DotL, L2F, NearestCentroid}
+import graft.expressions.NearestCentroid.{AscNegScore, Cosine, L2, MaxScore, MinDist}
 
 /** Embedding similarity search: brute-force cosine top-k as the exactness
   * baseline, random-hyperplane LSH bucketing as the scale path.
@@ -25,7 +26,8 @@ import graft.expressions.{DotF, DotFD, DotL, L2F}
   */
 object Similarity {
 
-  /** A native two-vector kernel ([[graft.expressions.VectorFold]]) as a Column. */
+  /** A native two-input kernel ([[graft.expressions.VectorFold]],
+    * [[graft.expressions.NearestCentroid]]) as a Column. */
   private def kernel(k: (Expression, Expression) => Expression, a: Column, b: Column): Column =
     GraftSqlBridge.column(k(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
@@ -42,6 +44,36 @@ object Similarity {
   def l2sq(a: Column, b: Column): Column = kernel(L2F, a, b)
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
+
+  /** The [[graft.expressions.NearestCentroid]] kernel as a Column: every
+    * nearest-centroid decision of the IVF / IVF-PQ paths, scored against a
+    * codebook column of the one-row frame [[centroidRow]] or [[pqRow]]
+    * builds.
+    */
+  private def nearest(v: Column, codebook: Column, metric: NearestCentroid.Metric,
+                      order: NearestCentroid.Order, n: Int = 0, off: Int = 0,
+                      len: Int = -1): Column =
+    kernel(NearestCentroid(_, _, metric, order, n, off, len), v, codebook)
+
+  /** One codebook entry of a (cid, c) table: struct(cid, c, cn). */
+  private def codebookEntry: Column = struct(col("cid"), col("c"), l2Norm(col("c")).as("cn"))
+
+  /** A (cid, c) centroid table as ONE broadcast row, `cents` =
+    * array<struct<cid, c, cn>> with each centroid's norm computed once.
+    * Cross joining it leaves the vector side's partitioning as it was: the
+    * kernel then scores each vector in a narrow projection. The table is
+    * codebook-sized, so it is collected in one task (`coalesce(1)`)
+    * instead of through a shuffle.
+    */
+  private[graft] def centroidRow(centroids: DataFrame): DataFrame =
+    broadcast(centroids.coalesce(1).agg(collect_list(codebookEntry).as("cents")))
+
+  /** The `nprobe` nearest centroid ids of `v` against [[centroidRow]]'s
+    * `cents`, ascending (−cosine, cid): the probe-list order of every IVF
+    * query path (a NULL score ranks first, NaN last).
+    */
+  private[graft] def probeList(v: Column, nprobe: Int): Column =
+    nearest(v, col("cents"), Cosine, AscNegScore, nprobe)
 
   /** Vectors with their norm precomputed once. */
   private def withNorm(df: DataFrame, id: String, vec: String, norm: String): DataFrame =
@@ -283,14 +315,7 @@ object Similarity {
   def ivfCentroids(df: DataFrame, nlist: Int, iters: Int = 2, n: Long = -1L): DataFrame = {
     val vecs = df.select(col("vec_id"), col("embedding").cast("array<float>").as("v"))
     val total = if (n >= 0L) n else vecs.count()
-    val cap = TrainPerList * nlist
-    val train =
-      if (total <= cap) vecs
-      else {
-        val thresh = ((BigInt(cap) << 32) / BigInt(total)).toLong
-        vecs.filter(conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") < thresh)
-      }
+    val train = trainSample(vecs, total, TrainPerList * nlist)
     // cid = the seed's own vec_id: deterministic (nlist lowest ids) and
     // distinct, which is all downstream needs — cid is only a join/group
     // key and a tie-break, so no dense 0..nlist-1 renumbering (the old
@@ -299,43 +324,54 @@ object Similarity {
     // per round keeps each Lloyd iteration's plan flat (without it,
     // iteration k's plan nests all k-1 prior assignments and Catalyst
     // re-optimizes the whole stack — the same iterative-lineage cost
-    // measured on nearDupComponents)
+    // measured on nearDupComponents). The seeds are a top-nlist of one
+    // scan: the first round's codebook row computes them, with no job of
+    // their own
     var centroids = vecs.orderBy("vec_id").limit(nlist)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("c"))
-      .localCheckpoint(true)
     for (_ <- 0 until iters) {
-      val assigned = assignToCentroid(train, centroids)
-      val zero = transform(element_at(col("vs"), 1), _ => lit(0.0))
       // array_sort pins the member order (collect_list arrival order is
       // shuffle-nondeterministic) so float summation order — and thus the
       // trained centroids — are identical across runs
-      centroids = assigned
+      centroids = assignToCentroid(train, centroids)
         .groupBy("cid").agg(array_sort(collect_list(col("v"))).as("vs"))
-        .select(col("cid"),
-          transform(
-            aggregate(col("vs"), zero, (acc, v) => zip_with(acc, v, (s, x) => s + x)),
-            s => (s / size(col("vs"))).cast("float")).as("c"))
+        .select(col("cid"), memberMean(col("vs")).as("c"))
         .localCheckpoint(true)
     }
     centroids
   }
 
-  /** Nearest centroid per vector. Norms are projected ONCE per side before
-    * the broadcast crossJoin (not re-derived per pair), and the argmax is a
-    * `max_by` hash aggregation — partial aggregation collapses the n×nlist
-    * scored rows back to n map-side, so the shuffle moves one row per
-    * vector (a rank-1 window would shuffle and sort all n×nlist rows).
-    * Tie-break matches the old window (score desc, cid asc) via the
-    * lexicographic (score, −cid) key.
+  /** The deterministic Lloyd training sample of [[ivfCentroids]] and
+    * [[pqCodebooks]]: all of `vecs` when `total <= cap`, else the vec_ids
+    * whose md5 32-bit prefix falls below cap/total of the hash space.
+    */
+  private def trainSample(vecs: DataFrame, total: Long, cap: Long): DataFrame =
+    if (total <= cap) vecs
+    else {
+      val thresh = ((BigInt(cap) << 32) / BigInt(total)).toLong
+      vecs.filter(conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
+        .cast("long") < thresh)
+    }
+
+  /** The Lloyd mean step: element-wise float mean of the member vectors
+    * `vs`, summed in array order in DOUBLE. */
+  private def memberMean(vs: Column): Column = {
+    val zero = transform(element_at(vs, 1), _ => lit(0.0))
+    transform(aggregate(vs, zero, (acc, v) => zip_with(acc, v, (s, x) => s + x)),
+      s => (s / size(vs)).cast("float"))
+  }
+
+  /** Nearest centroid per vector, (vec_id, v) → (vec_id, v, cid): one
+    * narrow projection of the nearest-centroid kernel over the broadcast
+    * [[centroidRow]] — no fan-out, no exchange, no sort on the vector
+    * side. Order: max (cosine, −cid), the order of the `max_by(struct(v,
+    * cid), struct(score, −cid))` aggregate the kernel replaced (NaN ranks
+    * best, NULL last).
     */
   private def assignToCentroid(vecs: DataFrame, centroids: DataFrame): DataFrame =
-    fanOut(vecs).withColumn("vn", l2Norm(col("v")))
-      .crossJoin(broadcast(centroids.withColumn("cn", l2Norm(col("c")))))
-      .withColumn("score", dot(col("v"), col("c")) / (col("vn") * col("cn")))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("v"), col("cid")),
-        struct(col("score"), -col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.v").as("v"), col("m.cid").as("cid"))
+    vecs.crossJoin(centroidRow(centroids))
+      .select(col("vec_id"), col("v"),
+        nearest(col("v"), col("cents"), Cosine, MaxScore).as("cid"))
 
   /** IVF ANN top-k: corpus vectors live in their centroid's inverted list
     * (the hash-partition key at scale); each query probes its `nprobe`
@@ -347,37 +383,27 @@ object Similarity {
     * sweep sets iters=1: each extra round costs a full assign+mean pass
     * over the training sample and buys <0.02 recall (the floor gate
     * `ann_ivf_recall` re-measures at every SF).
+    *
+    * One scored pass: each vector ranks the broadcast [[centroidRow]] once
+    * through the nearest-centroid kernel, ascending (−cosine, cid). The
+    * first of its `nprobe` cids is its inverted list, all of them are its
+    * probe list. The ranked frame is checkpointed because the corpus side
+    * and the probe side both read it. The vectors are redistributed first
+    * ([[fanOut]]): the probe-list join multiplies them.
     */
   def ivfTopK(df: DataFrame, k: Int, nlist: Int = 16, nprobe: Int = 6,
               iters: Int = 1, n: Long = -1L): DataFrame = {
     val vecs = df.select(col("vec_id"), col("embedding").cast("array<float>").as("v"))
-    // already materialized: ivfCentroids localCheckpoints its final round
+    // materialized when iters >= 1: ivfCentroids localCheckpoints each round
     val centroids = ivfCentroids(df, nlist, iters, n)
-    // ONE scored pass over the corpus: each vector ranks all centroids
-    // once; its inverted-list assignment IS probe[0] (same (-score, cid)
-    // tie-break as the old separate max_by), so corpus assignment and the
-    // top-nprobe probe list come out of the same hash aggregation instead
-    // of two full crossJoin passes. The shuffle moves 16-byte score
-    // structs (one full vector via first()), not nlist embedding copies,
-    // and no partition-wide sort happens (a rank window would shuffle+sort
-    // every scored row with its vector attached). localCheckpoint because
-    // both the corpus side and the probe side read this frame — the
-    // materialization is one corpus-sized pass, strictly cheaper than
-    // re-scoring n×nlist twice (an IVF build materializes its inverted
-    // lists in any engine).
-    val ranked = fanOut(vecs).withColumn("vn", l2Norm(col("v")))
-      .crossJoin(broadcast(centroids.withColumn("cn", l2Norm(col("c")))))
-      .withColumn("score", dot(col("v"), col("c")) / (col("vn") * col("cn")))
-      .groupBy("vec_id")
-      .agg(first(col("v")).as("v"), first(col("vn")).as("vn"),
-        slice(array_sort(collect_list(
-          struct((-col("score")).as("ns"), col("cid").as("cid")))),
-          1, nprobe).as("probe"))
+    val ranked = fanOut(vecs).crossJoin(centroidRow(centroids))
+      .select(col("vec_id"), col("v"), l2Norm(col("v")).as("vn"),
+        probeList(col("v"), nprobe).as("probe"))
       .localCheckpoint(true)
     val corpus = ranked.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-      col("vn").as("cn"), col("probe")(0)("cid").as("cid"))
+      col("vn").as("cn"), col("probe")(0).as("cid"))
     val probes = ranked.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      col("vn").as("qn"), explode(col("probe.cid")).as("cid"))
+      col("vn").as("qn"), explode(col("probe")).as("cid"))
     val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     probes.join(corpus, Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -428,23 +454,12 @@ object Similarity {
   def ivfQueryIndex(centroids: DataFrame, corpus: DataFrame, queries: DataFrame,
                     k: Int, nprobe: Int = 6): DataFrame = {
     val q = queries.select(col("vec_id"), col("embedding").cast("array<float>").as("v"))
-    // top-nprobe centroids per query via a rank window — same total order
-    // as the old slice(array_sort(collect_list(struct(−score, cid)))):
-    // (−score asc, cid asc). The rank-≤-nprobe filter plans as a
-    // WindowGroupLimit, pruning to nprobe rows per query map-side BEFORE
-    // the exchange, where the collect_list ObjectHashAggregate shipped
-    // every (query × centroid) row — with the 64-float query vector
-    // riding each one — through the shuffle to build arrays it then
-    // sliced (§2.3 shuffle fewer bytes; §4 codegen aggregates only).
-    val wProbe = Window.partitionBy("vec_id")
-      .orderBy((-col("score")).asc, col("cid").asc)
-    val probes = fanOut(q).withColumn("qn", l2Norm(col("v")))
-      .crossJoin(broadcast(centroids.withColumn("cn", l2Norm(col("c")))))
-      .withColumn("score", dot(col("v"), col("c")) / (col("qn") * col("cn")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("qn"),
-        col("cid"))
+    // top-nprobe centroids per query: the kernel's probe list over the
+    // broadcast centroid row, exploded — (−score asc, cid asc), the order
+    // of ivfTopK's probe lists
+    val probes = fanOut(q).crossJoin(centroidRow(centroids))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), l2Norm(col("v")).as("qn"),
+        explode(probeList(col("v"), nprobe)).as("cid"))
     val corp = corpus.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
       col("vn").as("cn"), col("cid"))
     val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
@@ -462,67 +477,93 @@ object Similarity {
     * `ksub`-centroid Lloyd codebook so a vector compresses to m small
     * codes (m bytes at ksub ≤ 256 — 32× smaller than 64 float32s).
     *
-    * All m subspace trainings run as ONE iterated job over the
-    * subspace-exploded sample — the codebook key is (j, cid), so per-
-    * iteration cost is a single assign+mean pass regardless of m (m
-    * sequential Lloyds would schedule m× the stages for the same work).
-    * Training sample, seeding, and tie-breaks follow [[ivfCentroids]]:
-    * deterministic md5 sample capped at `TrainPerList*ksub`, seeds = the
-    * ksub lowest vec_ids' subvectors, L2 assignment ties to the lower cid,
-    * member arrays sorted before the float mean — bit-stable across runs
-    * and partitionings. Returns (j, cid, c).
+    * All m subspace trainings run as ONE iterated job — the codebook key
+    * is (j, cid), so per-iteration cost is a single assign+mean pass
+    * regardless of m (m sequential Lloyds would schedule m× the stages for
+    * the same work). The assignment is one narrow projection: each
+    * training vector takes its m codes from the nearest-centroid kernel,
+    * scoring the j-th slice of the vector against the broadcast
+    * [[pqRow]] in min (d2, cid) order — the order of the `min_by`
+    * aggregate the kernel replaced. Training sample, seeding and
+    * tie-breaks follow [[ivfCentroids]]: deterministic md5 sample capped
+    * at `TrainPerList*ksub`, seeds = the ksub lowest vec_ids' subvectors,
+    * L2 ties to the lower cid, member arrays sorted before the float mean
+    * — bit-stable across runs and partitionings. Returns (j, cid, c).
     */
   def pqCodebooks(df: DataFrame, m: Int, ksub: Int, iters: Int = 2,
                   n: Long = -1L): DataFrame = {
     val vecs = normalized(df)
     val total = if (n >= 0L) n else vecs.count()
-    val cap = TrainPerList * ksub
-    val train =
-      if (total <= cap) vecs
-      else {
-        val thresh = ((BigInt(cap) << 32) / BigInt(total)).toLong
-        vecs.filter(conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") < thresh)
-      }
-    val sub = subvectors(train, m).localCheckpoint(false)
-    val l2 = (a: Column, b: Column) => l2sq(a, b)
-    var cb = subvectors(vecs.orderBy("vec_id").limit(ksub), m)
-      .select(col("j"), col("vec_id").cast("int").as("cid"), col("sv").as("c"))
-      .localCheckpoint(true)
+    val train = pqChecked(trainSample(vecs, total, TrainPerList * ksub))
+    // seeds as in ivfCentroids: computed by the first round's codebook row
+    var cb = bySubspace(pqChecked(vecs.orderBy("vec_id").limit(ksub)), m,
+        _ => col("vec_id").cast("int"))
+      .select(col("j"), col("cid"), col("sv").as("c"))
     for (_ <- 0 until iters) {
-      val zero = transform(element_at(col("vs"), 1), _ => lit(0.0))
-      cb = sub.join(broadcast(cb), Seq("j"))
-        .withColumn("d2", l2(col("sv"), col("c")))
-        .groupBy("vec_id", "j")
-        .agg(min_by(struct(col("sv"), col("cid")),
-          struct(col("d2"), col("cid"))).as("a"))
-        .groupBy(col("j"), col("a.cid").as("cid"))
-        .agg(array_sort(collect_list(col("a.sv"))).as("vs"))
-        .select(col("j"), col("cid"),
-          transform(
-            aggregate(col("vs"), zero, (acc, v) => zip_with(acc, v, (s, x) => s + x)),
-            s => (s / size(col("vs"))).cast("float")).as("c"))
+      cb = bySubspace(train.crossJoin(pqRow(cb, m)), m, j => pqCode(j, m))
+        .groupBy("j", "cid")
+        .agg(array_sort(collect_list(col("sv"))).as("vs"))
+        .select(col("j"), col("cid"), memberMean(col("vs")).as("c"))
         .localCheckpoint(true)
     }
     cb
   }
 
-  /** (vec_id, j, sv): the m contiguous subvectors of each vector. */
-  private def subvectors(vecs: DataFrame, m: Int): DataFrame = {
-    val d = 64 // embeddings are 64-dim (TESTDATA.md); require clean split
-    require(d % m == 0, s"m=$m must divide dim=$d")
-    val sub = d / m
-    // fail LOUDLY on a dimension mismatch: the static slices below would
-    // otherwise silently cover only the first `d` dims of a wider vector
-    // (wrong PQ codes, no error) — raise_error costs one size() compare
-    // per row and nothing else
-    val v = when(size(col("v")) === d, col("v")).otherwise(raise_error(
-      concat(lit(s"PQ subvectors: expected dim=$d, got dim="),
-        size(col("v")).cast("string"))))
-    vecs.select(col("vec_id"), explode(array((0 until m).map { j =>
-      struct(lit(j).as("j"), slice(v, j * sub + 1, sub).as("sv"))
-    }: _*)).as("s")).select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
+  /** Embeddings are 64-dim (TESTDATA.md); PQ slices at static offsets. */
+  private val PqDim = 64
+
+  /** Subvector width for `m` subspaces (a clean split is required). */
+  private def pqSub(m: Int): Int = {
+    require(PqDim % m == 0, s"m=$m must divide dim=$PqDim")
+    PqDim / m
   }
+
+  /** (vec_id, v) with `v` checked to be 64-dim: fail LOUDLY on a mismatch,
+    * since the static slices would otherwise silently cover only the
+    * first 64 dims of a wider vector (wrong PQ codes, no error).
+    * raise_error costs one size() compare per row and nothing else.
+    */
+  private def pqChecked(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), when(size(col("v")) === PqDim, col("v")).otherwise(raise_error(
+      concat(lit(s"PQ subvectors: expected dim=$PqDim, got dim="),
+        size(col("v")).cast("string")))).as("v"))
+
+  /** (vec_id, j, cid, sv): the m contiguous subvectors `sv` of each
+    * vector `v`, with `cid(j)` alongside.
+    */
+  private def bySubspace(vecs: DataFrame, m: Int, cid: Int => Column): DataFrame = {
+    val sub = pqSub(m)
+    vecs.select(col("vec_id"), explode(array((0 until m).map { j =>
+      struct(lit(j).as("j"), cid(j).as("cid"), slice(col("v"), j * sub + 1, sub).as("sv"))
+    }: _*)).as("s"))
+      .select(col("vec_id"), col("s.j").as("j"), col("s.cid").as("cid"), col("s.sv").as("sv"))
+  }
+
+  /** PQ codebooks (j, cid, c) as ONE broadcast row: per subspace j,
+    * `pq<j>` holds its entries (array<struct<cid, c, cn>>, the kernel's
+    * codebook) and `pm<j>` maps cid → c for the reconstruction.
+    */
+  private def pqRow(cb: DataFrame, m: Int): DataFrame = {
+    val lists = (0 until m).map(j => collect_list(when(col("j") === j, codebookEntry)).as(s"pq$j"))
+    broadcast(cb.coalesce(1).agg(lists.head, lists.tail: _*).select((0 until m).flatMap(j => Seq(
+      col(s"pq$j"), map_from_arrays(col(s"pq$j.cid"), col(s"pq$j.c")).as(s"pm$j"))): _*))
+  }
+
+  /** The PQ code of `v`'s j-th subvector: its nearest sub-centroid in
+    * [[pqRow]]'s `pq<j>`, min (d2, cid).
+    */
+  private def pqCode(j: Int, m: Int): Column = {
+    val sub = pqSub(m)
+    nearest(col("v"), col(s"pq$j"), L2, MinDist, off = j * sub, len = sub)
+  }
+
+  /** The PQ reconstruction of `v` (the decoded approximation ADC scores
+    * against): the code's sub-centroid of each subspace, concatenated by
+    * j. ⟨q, recon⟩ = Σ_j ⟨q_j, c_{j,code_j}⟩, the per-subspace lookup-table
+    * sum as one columnar dot.
+    */
+  private def pqRecon(m: Int): Column =
+    flatten(array((0 until m).map(j => col(s"pm$j")(pqCode(j, m))): _*))
 
   /** Unit-normalized vectors (PQ trains/encodes on the normalized corpus so
     * the asymmetric inner product approximates cosine directly).
@@ -544,12 +585,15 @@ object Similarity {
     * re-ranked with the exact float cosine.
     *
     * Scale shape: the coarse stage is [[ivfTopK]]'s one-scored-pass build
-    * (list id = hash partition key); PQ bounds per-candidate memory
-    * traffic to m bytes + one 64-float reconstruction held broadcast-side
-    * (codebooks are m*ksub tiny arrays); `oversample` bounds exact-vector
-    * reads to k*oversample per query — at 100 TB the full-precision
-    * vectors live in cold storage and only re-rank survivors are fetched
-    * (here: a join back to the corpus by neighbor id).
+    * (list id = hash partition key); the same projection encodes each
+    * vector — probe list, list id and PQ reconstruction all come out of
+    * the nearest-centroid kernel over the two broadcast codebook rows
+    * ([[centroidRow]], [[pqRow]]), with no aggregate and no join back.
+    * PQ bounds per-candidate memory traffic to m bytes + one 64-float
+    * reconstruction; `oversample` bounds exact-vector reads to
+    * k*oversample per query — at 100 TB the full-precision vectors live in
+    * cold storage and only re-rank survivors are fetched (here: a join
+    * back to the corpus by neighbor id).
     *
     * Degenerate-exactness contract (pinned in SimilaritySpec): when the
     * `ksub` seed vectors (lowest vec_ids) already cover every distinct
@@ -562,38 +606,19 @@ object Similarity {
                 m: Int = 16, ksub: Int = 16, oversample: Int = 8,
                 iters: Int = 1, n: Long = -1L): DataFrame = {
     val vecs = normalized(df)
-    val cb = pqCodebooks(df, m, ksub, iters = iters, n = n)
-    // encode every corpus vector: nearest sub-centroid per subspace, then
-    // reconstruct (the decoded approximation the ADC scores against).
-    // flatten(sorted-by-j sub-centroids) ≡ the LUT sum: ⟨q, recon⟩ =
-    // Σ_j ⟨q_j, c_{j,code_j}⟩ — identical values, columnar-friendly form.
-    val l2 = (a: Column, b: Column) => l2sq(a, b)
-    val recon = subvectors(vecs, m).join(broadcast(cb), Seq("j"))
-      .withColumn("d2", l2(col("sv"), col("c")))
-      .groupBy("vec_id", "j")
-      .agg(min_by(struct(col("c"), col("cid")), struct(col("d2"), col("cid"))).as("a"))
-      .groupBy("vec_id")
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("j"), col("a.c").as("c")))),
-        s => s("c"))).as("rv"))
+    val (cb, centroids) = pqTrain(df, vecs, nlist, m, ksub, iters, n)
     // coarse quantizer over the normalized corpus (same pass as ivfTopK:
-    // assignment = probe[0], probes = top-nprobe centroid lists)
-    val centroids = ivfCentroids(vecs.select(col("vec_id"), col("v").as("embedding")),
-      nlist, iters, n)
-    val ranked = fanOut(vecs).withColumn("vn", l2Norm(col("v")))
-      .crossJoin(broadcast(centroids.withColumn("cn", l2Norm(col("c")))))
-      .withColumn("score", dot(col("v"), col("c")) / (col("vn") * col("cn")))
-      .groupBy("vec_id")
-      .agg(first(col("v")).as("v"),
-        slice(array_sort(collect_list(
-          struct((-col("score")).as("ns"), col("cid").as("cid")))),
-          1, nprobe).as("probe"))
+    // assignment = probe[0], probes = top-nprobe centroid lists) and the
+    // PQ encode, in one projection
+    val ranked = pqChecked(fanOut(vecs))
+      .crossJoin(centroidRow(centroids)).crossJoin(pqRow(cb, m))
+      .select(col("vec_id"), col("v"), probeList(col("v"), nprobe).as("probe"),
+        pqRecon(m).as("rv"))
       .localCheckpoint(true)
     val corpus = ranked.select(col("vec_id").as("neighbor_id"),
-        col("probe")(0)("cid").as("cid"))
-      .join(recon.select(col("vec_id").as("neighbor_id"), col("rv")), Seq("neighbor_id"))
+      col("probe")(0).as("cid"), col("rv"))
     val probes = ranked.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      explode(col("probe.cid")).as("cid"))
+      explode(col("probe")).as("cid"))
     val wApprox = Window.partitionBy("query_id")
       .orderBy(col("approx").desc, col("neighbor_id").asc)
     val survivors = probes.join(corpus, Seq("cid"))
@@ -613,6 +638,19 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "cos")
   }
 
+  /** The two trained quantizers of an IVF-PQ index over `vecs` (=
+    * normalized(df)): the PQ codebooks, then the coarse centroids. The
+    * corpus is counted at most once, when `n < 0`.
+    */
+  private def pqTrain(df: DataFrame, vecs: DataFrame, nlist: Int, m: Int, ksub: Int,
+                      iters: Int, n: Long): (DataFrame, DataFrame) = {
+    val total = if (n >= 0L) n else vecs.count()
+    val cb = pqCodebooks(df, m, ksub, iters = iters, n = total)
+    val centroids = ivfCentroids(vecs.select(col("vec_id"), col("v").as("embedding")),
+      nlist, iters, total)
+    (cb, centroids)
+  }
+
   /** Build the persistable IVF-PQ index ONCE (the [[ivfBuildIndex]]
     * amortization pattern applied to the FAISS IndexIVFPQ layout):
     * returns (centroids, encoded) where `centroids` = (cid, c) is the
@@ -622,7 +660,8 @@ object Similarity {
     * against). Both are plain parquet-persistable DataFrames; at 100 TB
     * the encoded table (m bytes of code semantics per vector, stored here
     * as the reconstruction for columnar ADC) is the ONLY thing a query
-    * batch scans besides the k·oversample exact-re-rank fetches.
+    * batch scans besides the k·oversample exact-re-rank fetches. `cid`
+    * and `rv` come out of one projection of the nearest-centroid kernel.
     *
     * Same training/assignment arithmetic as [[ivfPqTopK]] — querying the
     * index with the corpus itself reproduces the fused result exactly
@@ -631,23 +670,10 @@ object Similarity {
   def ivfPqBuildIndex(df: DataFrame, nlist: Int, m: Int = 16, ksub: Int = 16,
                       iters: Int = 1, n: Long = -1L): (DataFrame, DataFrame) = {
     val vecs = normalized(df)
-    val cb = pqCodebooks(df, m, ksub, iters = iters, n = n)
-    val l2 = (a: Column, b: Column) => l2sq(a, b)
-    val recon = subvectors(vecs, m).join(broadcast(cb), Seq("j"))
-      .withColumn("d2", l2(col("sv"), col("c")))
-      .groupBy("vec_id", "j")
-      .agg(min_by(struct(col("c"), col("cid")), struct(col("d2"), col("cid"))).as("a"))
-      .groupBy("vec_id")
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("j"), col("a.c").as("c")))),
-        s => s("c"))).as("rv"))
-    val centroids = ivfCentroids(vecs.select(col("vec_id"), col("v").as("embedding")),
-      nlist, iters, n)
-    val assigned = assignToCentroid(vecs, centroids)
-      .select(col("vec_id"), col("cid"))
-      .join(recon, Seq("vec_id"))
-      .select("vec_id", "cid", "rv")
-    (centroids, assigned)
+    val (cb, centroids) = pqTrain(df, vecs, nlist, m, ksub, iters, n)
+    val encoded = assignToCentroid(pqChecked(vecs), centroids).crossJoin(pqRow(cb, m))
+      .select(col("vec_id"), col("cid"), pqRecon(m).as("rv"))
+    (centroids, encoded)
   }
 
   /** Probe a prebuilt [[ivfPqBuildIndex]] index: queries rank the
@@ -662,17 +688,10 @@ object Similarity {
                       fullVecs: DataFrame, queries: DataFrame, k: Int,
                       nprobe: Int, oversample: Int = 8): DataFrame = {
     val q = normalized(queries)
-    // rank-window probe selection, same rationale and identical total
-    // order as [[ivfQueryIndex]] (WindowGroupLimit map-side pruning
-    // instead of a collect_list ObjectHashAggregate)
-    val wProbe = Window.partitionBy("vec_id")
-      .orderBy((-col("score")).asc, col("cid").asc)
-    val probes = fanOut(q).withColumn("qn", l2Norm(col("v")))
-      .crossJoin(broadcast(centroids.withColumn("cn", l2Norm(col("c")))))
-      .withColumn("score", dot(col("v"), col("c")) / (col("qn") * col("cn")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cid"))
+    // the probe lists of [[ivfQueryIndex]], same kernel and order
+    val probes = fanOut(q).crossJoin(centroidRow(centroids))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        explode(probeList(col("v"), nprobe)).as("cid"))
     val wApprox = Window.partitionBy("query_id")
       .orderBy(col("approx").desc, col("neighbor_id").asc)
     val survivors = probes

@@ -318,8 +318,10 @@ object Streaming {
     *
     * Stage shapes, chosen for streaming legality:
     *  - probe selection is STATELESS: the centroid table collapses to one
-    *    static array row (nlist is small by design), each query scores it
-    *    in a `transform` lambda and explodes its `nprobe` best cids — no
+    *    static broadcast row ([[graft.ops.Similarity.centroidRow]]; nlist
+    *    is small by design), each query scores it with the codegen'd
+    *    nearest-centroid kernel — the batch path's probe list, ascending
+    *    (−cosine, cid) — and explodes its `nprobe` best cids; no
     *    per-query aggregation state;
     *  - candidate scoring is a stream-static equi-join on `cid`
     *    (stateless; the static side is the inverted-list table);
@@ -337,19 +339,14 @@ object Streaming {
     */
   def annProbe(centroids: DataFrame, corpus: DataFrame, queries: DataFrame,
                k: Int, nprobe: Int = 6): DataFrame = {
-    import graft.ops.Similarity.{dot, l2Norm}
-    val cents = broadcast(
-      centroids.agg(collect_list(struct(col("cid"), col("c"))).as("cents")))
+    import graft.ops.Similarity.{centroidRow, dot, l2Norm, probeList}
     val probed = queries
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<float>").as("qv"))
       .withColumn("qn", l2Norm(col("qv")))
-      .crossJoin(cents)
-      .withColumn("scored", transform(col("cents"), c =>
-        struct((-dot(col("qv"), c("c")) / (col("qn") * l2Norm(c("c")))).as("ns"),
-          c("cid").as("cid"))))
+      .crossJoin(centroidRow(centroids))
       .select(col("query_id"), col("qv"), col("qn"),
-        explode(slice(array_sort(col("scored")), 1, nprobe)("cid")).as("cid"))
+        explode(probeList(col("qv"), nprobe)).as("cid"))
     val corp = corpus.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
       col("vn").as("cn"), col("cid"))
     probed.join(corp, Seq("cid"))

@@ -18,8 +18,10 @@ object RecallProbe {
     val reps = if (args.length > 1) args(1).toInt else 3
     val nlistArg = if (args.length > 2) args(2).toInt else 0
     val nprobeArg = if (args.length > 3) args(3).toInt else 0
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -12,6 +12,12 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The DIVIDE_BY_ZERO error ANSI-mode `Divide` raises, for native
+    * expressions that replace a division.
+    */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** A 1-row/1-column DataFrame as a scalar-subquery Column — how
     * Catalyst's own `InjectRuntimeFilter` feeds a bloom sketch to
     * `might_contain` (which requires a constant or scalar subquery, not a

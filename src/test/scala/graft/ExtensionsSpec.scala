@@ -147,4 +147,164 @@ class ExtensionsSpec extends SparkTestBase {
     assert(lit2.isNullAt(0))
     assert(lit2.getLong(1) === -7L)
   }
+
+  /** Runs `e` over `rows` both ways: interpreted `eval` and a generated
+    * projection. A kernel error surfaces as Left(message). */
+  private def bothPaths(e: org.apache.spark.sql.catalyst.expressions.Expression,
+                        rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : Seq[(String, Long => Either[String, Any])] = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    def out(x: Any): Any = x match {
+      case a: ArrayData => a.toIntArray().toSeq
+      case o => o
+    }
+    def attempt(f: => Any): Either[String, Any] =
+      try Right(out(f)) catch { case t: ArithmeticException => Left(t.getMessage) }
+    val proj = GenerateUnsafeProjection.generate(Seq(e))
+    val byId = rows.map(r => r.getLong(0) -> r).toMap
+    Seq(
+      "interpreted" -> (id => attempt(e.eval(byId(id)))),
+      "codegen" -> (id => attempt {
+        val p = proj(byId(id))
+        if (p.isNullAt(0)) null else if (e.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+          p.getArray(0) else p.getInt(0)
+      }))
+  }
+
+  test("nearest_centroid ≡ the max_by / array_sort+slice / min_by it replaces, " +
+    "codegen and interpreted: random codebook, exact ties, duplicates, NaN") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.functions._
+    import graft.expressions.NearestCentroid
+    import graft.expressions.NearestCentroid._
+    import graft.ops.Similarity.{dot, l2Norm, l2sq}
+    import spark.implicits._
+    val dim = 8
+    val rng = new scala.util.Random(17)
+    def rnd(): Array[Float] = Array.fill(dim)(rng.nextFloat() - 0.5f)
+    val base = Seq.fill(10)(rnd())
+    // exact ties: 2·c scores c's cosine to the bit; a duplicate ties both
+    // metrics. cids fall with entry order, so a tie resolved by position
+    // instead of by the lower cid shows
+    val cents = (base ++ Seq(base(3).map(_ * 2f), base(5), base(5))).zipWithIndex
+      .map { case (c, i) => (100 - 7 * i, c) }.toDF("cid", "c")
+    val vecs = (Seq.fill(30)(rnd()) ++ Seq(base(5), base(3), Array.fill(dim)(Float.NaN),
+        base(1).updated(2, Float.NaN))).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "v")
+    // the kernel's input rows: (vec_id, v, codebook row)
+    def rows(vs: DataFrame, cb: DataFrame) = {
+      val df = vs.crossJoin(cb.agg(collect_list(
+        struct(col("cid"), col("c"), l2Norm(col("c")).as("cn"))).as("cents")))
+        .select("vec_id", "v", "cents")
+      (df.schema, df.queryExecution.toRdd.map(_.copy()).collect().toSeq)
+    }
+    def check(what: String, vs: DataFrame, cb: DataFrame, ref: DataFrame,
+              mk: (BoundReference, BoundReference) => NearestCentroid): Unit = {
+      val want = ref.collect().map { r =>
+        r.getLong(0) -> (if (r.isNullAt(1)) null else r.get(1) match {
+          case s: scala.collection.Seq[_] => s.toSeq
+          case o => o
+        })
+      }.toMap
+      val (schema, in) = rows(vs, cb)
+      val e = mk(BoundReference(1, schema(1).dataType, true),
+        BoundReference(2, schema(2).dataType, true))
+      bothPaths(e, in).foreach { case (path, run) =>
+        want.foreach { case (id, w) =>
+          assert(run(id) === Right(w), s"$what, $path path, vec_id=$id")
+        }
+      }
+    }
+    val scored = vecs.crossJoin(cents)
+      .withColumn("score", dot(col("v"), col("c")) / (l2Norm(col("v")) * l2Norm(col("c"))))
+    check("assignment", vecs, cents,
+      scored.groupBy("vec_id").agg(max_by(col("cid"), struct(col("score"), -col("cid")))),
+      NearestCentroid(_, _, Cosine, MaxScore))
+    Seq(1, 4, 20).foreach { n =>
+      check(s"probe list n=$n", vecs, cents,
+        scored.groupBy("vec_id").agg(slice(array_sort(collect_list(
+          struct((-col("score")).as("ns"), col("cid")))), 1, n)("cid")),
+        NearestCentroid(_, _, Cosine, AscNegScore, n))
+    }
+    // PQ: the [off, off+len) slice against a len-dim codebook
+    val (off, len) = (4, 4)
+    val sub = cents.select(col("cid"), slice(col("c"), off + 1, len).as("c"))
+    check("pq code", vecs, sub,
+      vecs.crossJoin(sub).withColumn("d2", l2sq(slice(col("v"), off + 1, len), col("c")))
+        .groupBy("vec_id").agg(min_by(col("cid"), struct(col("d2"), col("cid")))),
+      NearestCentroid(_, _, L2, MinDist, off = off, len = len))
+  }
+
+  test("nearest_centroid on a zero vector: DIVIDE_BY_ZERO under ANSI, NULL scores without") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.functions._
+    import graft.expressions.NearestCentroid
+    import graft.expressions.NearestCentroid._
+    import graft.ops.Similarity.{dot, l2Norm}
+    import spark.implicits._
+    val cents = Seq((9, Array(1f, 0f)), (4, Array(0f, 1f)), (7, Array(-1f, -1f))).toDF("cid", "c")
+    val zero = Seq((0L, Array(0f, 0f))).toDF("vec_id", "v")
+    val df = zero.crossJoin(cents.agg(collect_list(
+        struct(col("cid"), col("c"), l2Norm(col("c")).as("cn"))).as("cents")))
+      .select("vec_id", "v", "cents")
+    val in = df.queryExecution.toRdd.map(_.copy()).collect().toSeq
+    def kernel(order: Order, n: Int, ansi: Boolean) = NearestCentroid(
+      BoundReference(1, df.schema(1).dataType, true),
+      BoundReference(2, df.schema(2).dataType, true), Cosine, order, n, failOnError = ansi)
+    // built per mode: a division fixes its ANSI behavior when constructed
+    def scored = zero.crossJoin(cents)
+      .withColumn("score", dot(col("v"), col("c")) / (l2Norm(col("v")) * l2Norm(col("c"))))
+    def assign = scored.groupBy("vec_id").agg(max_by(col("cid"), struct(col("score"), -col("cid"))))
+    def probe = scored.groupBy("vec_id").agg(slice(array_sort(collect_list(
+      struct((-col("score")).as("ns"), col("cid")))), 1, 2)("cid"))
+    // ANSI (the session default): the replaced division raises, so does the kernel
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    assert(intercept[Exception](assign.collect()).getMessage.contains("DIVIDE_BY_ZERO"))
+    Seq(kernel(MaxScore, 0, ansi = true), kernel(AscNegScore, 2, ansi = true)).foreach { e =>
+      bothPaths(e, in).foreach { case (path, run) =>
+        val got = run(0L)
+        assert(got.fold(_.contains("DIVIDE_BY_ZERO"), _ => false), s"$path: $got")
+      }
+    }
+    // legacy division: every score is NULL, so the lower cids win
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      assert(assign.collect()(0).getInt(1) === 4)
+      assert(probe.collect()(0).getSeq[Int](1) === Seq(4, 7))
+      bothPaths(kernel(MaxScore, 0, ansi = false), in).foreach { case (path, run) =>
+        assert(run(0L) === Right(4), path)
+      }
+      bothPaths(kernel(AscNegScore, 2, ansi = false), in).foreach { case (path, run) =>
+        assert(run(0L) === Right(Seq(4, 7)), path)
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+  }
+
+  test("nearest_centroid type-checks its inputs, naming the kernel") {
+    import org.apache.spark.sql.{Column, GraftSqlBridge}
+    import org.apache.spark.sql.functions._
+    import graft.expressions.NearestCentroid
+    import graft.expressions.NearestCentroid._
+    import spark.implicits._
+    val df = Seq((Array(1, 2), Array(1f, 2f))).toDF("ints", "fl")
+    def k(v: Column, cb: Column, metric: Metric) = GraftSqlBridge.column(NearestCentroid(
+      GraftSqlBridge.expression(v), GraftSqlBridge.expression(cb), metric, MinDist))
+    val withCn = array(struct(lit(1).as("cid"), col("fl").as("c"), lit(1.0).as("cn")))
+    val noCn = array(struct(lit(1).as("cid"), col("fl").as("c")))
+    Seq(
+      k(col("ints"), withCn, Cosine) -> ("NearestCentroid requires (array<float>, " +
+        "array<struct<cid: int, c: array<float>, cn: double>>) inputs, got array<int>"),
+      k(col("fl"), noCn, Cosine) -> ("cn: double>>) inputs, got array<float> and " +
+        "array<struct<cid:int,c:array<float>>>"),
+      k(col("fl"), col("fl"), L2) -> ("NearestCentroid requires (array<float>, " +
+        "array<struct<cid: int, c: array<float>>>) inputs, got array<float> and array<float>")
+    ).foreach { case (call, want) =>
+      val e = intercept[Exception](df.select(call).collect())
+      assert(e.getMessage.contains(want), e.getMessage)
+    }
+    // L2 does not read cn, so a (cid, c) codebook is enough
+    assert(df.select(k(col("fl"), noCn, L2)).collect()(0).getInt(0) === 1)
+  }
 }

@@ -94,6 +94,37 @@ class PlanGuardSpec extends SparkTestBase {
     }
   }
 
+  test("IVF / IVF-PQ builds and probes rank centroids without a SortAggregate") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import graft.ops.Similarity
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.finalPhysicalPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    // every nearest-centroid decision is a narrow projection of the
+    // NearestCentroid kernel over a one-row codebook collected without a
+    // shuffle: the builds shuffle nothing, the probes shuffle the query
+    // fan-out and the candidate join only
+    Seq(
+      ("ivfBuildIndex corpus", () => Similarity.ivfBuildIndex(emb, nlist = 8)._2, 0),
+      ("ivfPqBuildIndex encoded", () => Similarity.ivfPqBuildIndex(emb, nlist = 8)._2, 0),
+      ("ann_ivf", () => SparkEntry.queries("ann_ivf")(spark, sf("sf0.001")), 2),
+      ("ann_ivfpq", () => SparkEntry.queries("ann_ivfpq")(spark, sf("sf0.001")), 2)
+    ).foreach { case (name, df, shuffles) =>
+      val qe = df().queryExecution
+      qe.toRdd.foreach(_ => ())
+      val plan = qe.executedPlan
+      assert(!nodes(plan).exists(_.isInstanceOf[SortAggregateExec]),
+        s"$name: struct-buffer SortAggregate is back:\n$plan")
+      assert(countShuffleStages(plan) === shuffles,
+        s"$name: expected $shuffles shuffle stages:\n$plan")
+    }
+  }
+
   test("ta_pack_bins: shard window and (shard,bin) window share ONE exchange") {
     // hashpartitioning(shard) clusters every (shard, bin_id) group, so the
     // refined window must add only a local sort — a second exchange here

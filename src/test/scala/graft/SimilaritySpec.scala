@@ -239,6 +239,19 @@ class SimilaritySpec extends SparkTestBase {
     assert(pq.nonEmpty)
   }
 
+  test("IVF-PQ rejects a non-64-dim corpus with the named PQ error") {
+    val narrow = emb.limit(40)
+      .select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))
+    Seq[() => Any](
+      () => Similarity.pqCodebooks(narrow, m = 16, ksub = 16).collect(),
+      () => Similarity.ivfPqBuildIndex(narrow, nlist = 4)._2.collect(),
+      () => Similarity.ivfPqTopK(narrow, k = 3, nlist = 4, nprobe = 2).collect()
+    ).foreach { run =>
+      val e = intercept[Exception](run())
+      assert(e.getMessage.contains("PQ subvectors: expected dim=64, got dim=32"), e.getMessage)
+    }
+  }
+
   test("ivfPqTopK: deterministic across runs; nontrivial recall@5 with re-rank") {
     // defaults (m=16, ksub=16, oversample=8): measured sweep at sf0.001 —
     // (8,16,ov4) 0.43, (8,32,ov4) 0.51, (16,16,ov4) 0.59, (16,16,ov8)
