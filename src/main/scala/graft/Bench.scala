@@ -1,10 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Timing harness over `SparkEntry.queries`; prints a `total_detail` and a
+  * compact `total` JSON line.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> SPARK_GRAFT_RUNS=<n> runMain graft.Bench
+  * [queryName ...] — with names given, only those queries are warmed and
+  * timed, and both lines are restricted to them (the single-query loop).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // median-of-N timing (default 3): single-shot numbers on a contended
     // host showed ±2× run-to-run noise (BENCH_NOTES), which can't tell a
     // real 2× regression from scheduling jitter; the median of 3 runs plus
@@ -15,21 +20,8 @@ object Bench {
     // The run count is emitted in the JSON and bench_duckdb warns when it
     // materially exceeds the duck side's sample count.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same split-size rationale as Verify: whole tables are single small
-      // files locally; 8 MB (+ a 64 KB open-cost floor so sub-8 MB
-      // compute-dense tables like documents still split) keeps sf1 scans
-      // parallel, no-op at sf0.01/0.1 single-row-group files
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.toSeq)
+    val spark = Harness.session
     // absorb one-time session costs (codegen compiler, parquet reader,
     // shuffle machinery) so per-query timings measure the queries
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -39,71 +31,35 @@ object Bench {
     // startup. Disable with SPARK_GRAFT_WARMUP=none.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "/root/testdata/sf0.001")
     if (warmDir != "none" && new java.io.File(warmDir).isDirectory) {
-      SparkEntry.queries.foreach { case (_, fn) =>
+      selected.foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
     }
-    // drop every cache the warmup persisted — 90+ retained per-query
-    // indexes otherwise squat on storage memory through the timed runs
-    // (measured as multi-× noise on individual query times via GC churn)
-    spark.catalog.clearCache()
-    // ... and every checkpoint BLOCK too: clearCache only empties the
-    // CacheManager; the warmup's localCheckpoint blocks (one per hot-path
-    // operator × 232 queries, at warmDir) live at the RDD level and would
-    // otherwise squat on storage memory until the ContextCleaner notices
-    // the GC'd references — the r14 verdict's prime suspect for 10–38 s
-    // in-run stalls. Safe here: warmDir frames are never re-executed
-    // (every timed run builds a fresh DataFrame at sfDir).
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // pre-build the NHL Silver materializations for the TIMED sfDir (the
-    // dbt-table build step, one-time per process): without this the first
-    // timed touch of any nhl_* query pays the whole bronze→silver build —
-    // medians hid it but the spread column charged 67-101 s to arbitrary
-    // nhl queries. localCheckpoints survive clearCache by design.
-    // NonFatal only (an OOM must kill the bench, not skew it), and the
-    // outcome is surfaced in the emitted JSON ("silver_prebuilt") so a
-    // round whose nhl_* timings absorbed the build is identifiable.
-    val silverPrebuilt =
-      try { graft.queries.NhlQueries.materializeSilver(spark, sfDir); true }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] silver build failed: $e"); false }
-    // pre-build the IVF / IVF-PQ ANN indexes for the timed sfDir, same
-    // one-time-materialization contract as silver and DISCLOSED the same
-    // way ("ann_index_prebuilt" below): the r14 verdict flagged that the
-    // index memo silently survived the per-query cache isolation while
-    // only silver_prebuilt was surfaced. With the prebuild the timed
-    // ann_ivf*/recall numbers measure the probe against a built index (the
-    // deployment shape the index API advertises); without it (field
-    // false), the first timed invocation pays the full build inline.
-    val annPrebuilt =
-      try { graft.queries.LlmQueries.prebuildAnnIndex(spark, sfDir); true }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] ann index build failed: $e"); false }
-    // Everything persisted from here back is the declared untimed prebuild
-    // (silver + ann index). Snapshot those RDD ids: per-query cleanup
-    // below drops every checkpoint block CREATED BY a timed run but must
-    // never touch the prebuilt frames (their lineage is truncated — an
-    // unpersisted prebuild block cannot be recomputed).
-    val prebuiltIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // drop every cache and checkpoint block the warmup left (90+ retained
+    // per-query indexes otherwise squat on storage memory through the
+    // timed runs — the r14 verdict's prime suspect for 10–38 s in-run
+    // stalls). Safe here: warmDir frames are never re-executed (every
+    // timed run builds a fresh DataFrame at sfDir).
+    Harness.release(spark, Set.empty)
+    // pre-build the NHL Silver materializations and the IVF / IVF-PQ ANN
+    // indexes for the TIMED sfDir (one-time per process): without this the
+    // first timed touch of any nhl_* / ann_ivf* query pays the whole build
+    // — medians hid it but the spread column charged 67-101 s to arbitrary
+    // nhl queries. Both outcomes are DISCLOSED in the emitted JSON
+    // ("silver_prebuilt", "ann_index_prebuilt") so a round whose timings
+    // absorbed a build is identifiable.
+    val prebuilt = Harness.prebuild(spark, sfDir)
 
     // a failing query must NOT median as a fast clean pass: record success
     // and failure separately; medians are computed over successful runs
     // only, and queries with any failing run are listed in "failed"
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    def timeOnce(fn: Harness.Query): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // outside the timer; isolates queries
-      // drop the run's own localCheckpoint blocks NOW (outside the timer),
-      // not at the next GC: clearCache cannot see them, and 232 queries ×
-      // 4 passes of retained multi-MB checkpointed frames is exactly the
-      // "retained blocks squat on storage memory → GC-churn noise" failure
-      // documented above. Each run builds a fresh DataFrame, so blocks
-      // born in this run are dead after its action; the prebuilt
-      // silver/ann frames (prebuiltIds) are the only cross-run survivors.
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!prebuiltIds.contains(id)) rdd.unpersist(blocking = true)
-      }
+      // outside the timer; isolates queries (232 queries × 4 passes of
+      // retained multi-MB checkpointed frames otherwise churn the GC)
+      Harness.release(spark, prebuilt.ids)
       (dt, ok)
     }
     // interleave rounds (run 1 of every query, then run 2, ...) rather than
@@ -119,14 +75,13 @@ object Bench {
     // verdict's #4). The duck side's min-of-runs discards its own first
     // touch symmetrically; with priming, every TIMED sample is
     // steady-state and the spread column reports scheduler noise, not
-    // first-touch artifacts. SPARK_GRAFT_PRIME=false disables.
-    val prime = sys.env.getOrElse("SPARK_GRAFT_PRIME", "true") == "true"
-    val names = SparkEntry.queries.keys.toSeq
+    // first-touch artifacts.
+    val names = selected.keys.toSeq
     val samples = collection.mutable.Map(names.map(_ -> List.empty[Double]): _*)
     val failures = collection.mutable.Map(names.map(_ -> 0): _*)
-    ((if (prime) 0 else 1) to runs).foreach { round =>
+    (0 to runs).foreach { round =>
       names.foreach { n =>
-        val (dt, ok) = timeOnce(SparkEntry.queries(n))
+        val (dt, ok) = timeOnce(selected(n))
         if (round > 0) {
           if (ok) samples(n) = dt :: samples(n) else failures(n) += 1
         }
@@ -172,7 +127,7 @@ object Bench {
     def jarr(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = med.values.sum
     // full per-query detail first (humans / BENCH_NOTES), ...
-    val detailLine = s"""{"metric":"total_detail","value":$total,"unit":"sec","runs":$runs,"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"queries":${jmap(med, ok)},"queries_min":${jmap(minT, ok)},"spread":${jmap(spread, ok)},"sf":"$sfDir"}"""
+    val detailLine = s"""{"metric":"total_detail","value":$total,"unit":"sec","runs":$runs,"primed":true,"silver_prebuilt":${prebuilt.silver},"ann_index_prebuilt":${prebuilt.annIndex},"failed":${jarr(failed)},"queries":${jmap(med, ok)},"queries_min":${jmap(minT, ok)},"spread":${jmap(spread, ok)},"sf":"$sfDir"}"""
     println(detailLine)
     // ... persisted too: the driver's stdout tail truncates this line every
     // round (BENCH_r*.json parsed=null), and auditors then misread the
@@ -199,7 +154,7 @@ object Bench {
       "ta_e2e_pipeline",
       "nhl_fact_player_game_stats", "nhl_team_shot_metrics", "nhl_sog_props_v2"
     ).filter(med.contains)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"nq":${names.size},"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"queries":${jmap(med, headline)},"note":"headline subset; full map on total_detail line","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"nq":${names.size},"primed":true,"silver_prebuilt":${prebuilt.silver},"ann_index_prebuilt":${prebuilt.annIndex},"failed":${jarr(failed)},"queries":${jmap(med, headline)},"note":"headline subset; full map on total_detail line","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for representative queries — the plan-
   * review loop (SURVEY guidance: after each operator works, explain the
   * plan and iterate until it's the plan you'd want at 100 TB).
@@ -13,14 +11,7 @@ object Plans {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("p9_date_window", "j1_broadcast_dim", "tpch_q3", "a1_sum_groupby",
         "w1_latest_snapshot", "ann_topk_brute")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

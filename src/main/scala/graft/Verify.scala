@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -34,57 +33,13 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val selected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (args.length > 2) {
-        val names = args.drop(2).toSet
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(names).toMap
-      } else SparkEntry.queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, Tables.events
-      // converts to microsecond TimestampType (matches DuckDB's NS→US cast).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // split size tuned to the data:core ratio (SURVEY §scale): whole
-      // tables here are 1-150 MB single files, so the 128 MB default maps
-      // every SCAN stage to one task on a 32-core box; 8 MB keeps scans
-      // parallel at sf1 without changing sf0.01/sf0.1 behavior (those files
-      // are under 8 MB). A real cluster reading TB-sized tables wants the
-      // default back.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // ...and the 4 MB openCostInBytes floor re-serializes any table
-      // UNDER 8 MB (maxSplitBytes = min(maxPartitionBytes,
-      // max(openCostInBytes, totalBytes/minPartitionNum))): documents at
-      // sf1 is 5.8 MB of heavily-compressed text whose explode/shingle
-      // stages are compute-dense — one scan partition pinned a 345 s
-      // dd_dedup_corpus run to 1.4 cores. 64 KB lets bytesPerCore win, so
-      // every multi-row-group table splits to ~cores partitions. On a real
-      // cluster file count/volume provides this for free; the floor exists
-      // to amortize per-file open cost over many small files, which a
-      // single-file-per-table layout never hits.
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.drop(2).toSeq)
+    val spark = Harness.session
     new java.io.File(outDir).mkdirs()
-    // materialize the process-level frames (silver tables, ANN indexes)
-    // once up front, then snapshot their RDD ids: the per-query cleanup
-    // below must drop each query's own checkpoint blocks (232 queries'
-    // worth otherwise accumulate on storage memory — same failure mode the
-    // bench documents) without touching the shared lineage-truncated
-    // frames, which cannot be recomputed once unpersisted.
-    try graft.queries.NhlQueries.materializeSilver(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] silver build failed: $e") }
-    try graft.queries.LlmQueries.prebuildAnnIndex(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] ann index build failed: $e") }
-    val prebuiltIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the per-query release below drops each query's own checkpoint blocks
+    // (232 queries' worth otherwise accumulate on storage memory — same
+    // failure mode the bench documents) but keeps the prebuilt frames
+    val prebuilt = Harness.prebuild(spark, sfDir)
     selected.foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce collapses every stage
       // upstream of the last exchange into one task — for broadcast-join
@@ -98,10 +53,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!prebuiltIds.contains(id)) rdd.unpersist(blocking = true)
-      }
+      Harness.release(spark, prebuilt.ids)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -148,13 +148,14 @@ object Models {
   /** `dim_date.sql`: generated spine (row generator → dates), NHL season /
     * phase / flags. `runDate` injected instead of CURRENT_DATE so outputs
     * are reproducible (SURVEY §7.4.5); spine spans 2020-01-01 → runDate+3y
-    * (`dim_date.sql:26,114`).
+    * (`dim_date.sql:26,114`), so it is empty when runDate+3y falls before
+    * 2020-01-01 (`sequence` would throw on the reversed bounds).
     */
   def dimDate(spark: org.apache.spark.sql.SparkSession, runDate: String): DataFrame = {
     val d = col("date_day")
-    spark.range(1).select(explode(sequence(
-      to_date(lit("2020-01-01")), add_months(to_date(lit(runDate)), 36),
-      expr("interval 1 day"))).as("date_day"))
+    val (start, end) = (to_date(lit("2020-01-01")), add_months(to_date(lit(runDate)), 36))
+    spark.range(1).select(explode(
+      when(end >= start, sequence(start, end, expr("interval 1 day")))).as("date_day"))
       .select(d,
         year(d).as("year"),
         month(d).as("month"),

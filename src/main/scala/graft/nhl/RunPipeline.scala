@@ -1,7 +1,5 @@
 package graft.nhl
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end pipeline entrypoint — the one-command replacement for the
   * reference's Airflow DAG + COPY INTO + dbt Cloud run (SURVEY §3.1):
   *
@@ -20,18 +18,8 @@ object RunPipeline {
     require(args.length >= 2, "usage: RunPipeline <rawRoot> <silverRoot> [runDate]")
     val Array(rawRoot, silverRoot) = args.take(2)
     val runDate = args.lift(2).getOrElse(java.time.LocalDate.now().toString)
-    val reusedSession = SparkSession.getActiveSession.isDefined
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("nhl-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reusedSession = graft.Harness.existing.isDefined
+    val spark = graft.Harness.session
 
     val boxscore = Bronze.readRawSnapshots(spark,
       s"$rawRoot/raw/nhl/game_boxscore/*/*/*/*.json", Schemas.boxscore)

@@ -204,7 +204,8 @@ object LlmQueries extends QueryPack {
 
   // dd_simhash_recall floor, in percent: fraction of the exact >= 0.9
   // 3-gram-Jaccard pairs that simhashPairs(maxHamming=3) recovers.
-  // Measured (tools/SimhashRecallProbe, deterministic per SF — both
+  // Measured with this face's own arithmetic (exact 0.9 ngramJaccardPairs
+  // vs simhashPairs at hamming <= 3; deterministic per SF — both
   // pipelines are hash-stable so reps are exact): 16.0% at sf0.01 (4/25),
   // 19.3% at sf0.1 (48/249). SimHash at hamming<=3
   // over ~100-token docs is a far stricter sieve than 0.9 shingle-Jaccard
@@ -605,7 +606,7 @@ object LlmQueries extends QueryPack {
     // independently), at least SimhashRecallFloorPct% must be recovered by
     // simhashPairs at hamming <= 3. The hashes themselves can never match
     // an external engine; the pair-count contract can. Floor provenance in
-    // the constant's comment (tools/SimhashRecallProbe).
+    // the constant's comment.
     "dd_simhash_recall" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val truth = Dedup.ngramJaccardPairs(docs, "text", "doc_id",

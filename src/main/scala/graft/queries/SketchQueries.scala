@@ -29,7 +29,8 @@ import graft.sources.Tables
 object SketchQueries extends QueryPack {
 
   /** HLL++ at rsd=0.05: measured relative error on events.user_id
-    * (graft.tools.SketchErr) is 0.0067 at sf0.01 and 0.0667 at sf0.1 —
+    * against the exact distinct count (BENCH_NOTES §Sketch-gate
+    * calibration, round 5) is 0.0067 at sf0.01 and 0.0667 at sf0.1 —
     * identical across the 5 event_type groups because every user emits
     * every event type, so the distinct sets (and the sketch) coincide.
     * The bound is 3σ of the configured rsd and >2× the measured worst.
@@ -39,10 +40,10 @@ object SketchQueries extends QueryPack {
   /** percentile_approx at accuracy=10000 picks a member within rank
     * error ≈ n/10000 of the true quantile; lineitem groups are ≤~260k rows
     * at sf0.1 → rank error ≤ ~26 rows. Measured relative value error
-    * (graft.tools.SketchErr) ≤ 2.1e-4 at both SFs vs the exact
-    * interpolated median; 0.02 gives ~100× headroom while still failing
-    * on any real sketch break (wrong rank math lands orders of magnitude
-    * off).
+    * (BENCH_NOTES §Sketch-gate calibration, round 5) ≤ 2.1e-4 at both
+    * SFs vs the exact interpolated median; 0.02 gives ~100× headroom
+    * while still failing on any real sketch break (wrong rank math lands
+    * orders of magnitude off).
     */
   val PctRelBound = 0.02
 
@@ -157,7 +158,8 @@ object SketchQueries extends QueryPack {
     * scales that by sqrt(|A u B| / |A n B|), and the even/odd corpus
     * halves overlap heavily (copy-structure corpus), keeping the factor
     * small. Measured |est - exact| / exact via [[kmvIntersectRaw]]
-    * (graft.tools.KmvErr): 0.0032 at sf0.001, 0.0197 at sf0.01, 0.0241
+    * against the exact distinct-shingle intersection of the even/odd
+    * halves: 0.0032 at sf0.001, 0.0197 at sf0.01, 0.0241
     * at sf0.1 AND sf1 (identical — the 10x jittered twins add no new
     * shingle vocabulary) — the 0.15 bound is >6x the worst measurement
     * while still failing on any real sketch break (a wrong trim or a

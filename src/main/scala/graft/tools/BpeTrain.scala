@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Artifact generator: trains the shipped BPE merge lists on a testdata
   * corpus and prints them as Scala source (the list pasted into
   * LlmQueries.BpeMerges*). Run: runMain graft.tools.BpeTrain [rounds] [sfDir]
@@ -10,13 +8,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     val rounds = if (args.nonEmpty) args(0).toInt else 40
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session
     val docs = graft.sources.Tables.documents(spark, dir)
     val merges = graft.ops.CorpusOps.bpeTrainMerges(docs, "text", rounds)
       .orderBy("round")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 import graft.sources.Tables
@@ -18,13 +17,7 @@ object RecallProbe {
     val reps = if (args.length > 1) args(1).toInt else 3
     val nlistArg = if (args.length > 2) args(2).toInt else 0
     val nprobeArg = if (args.length > 3) args(3).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session
     val emb = Tables.embeddings(spark, dir)
     val n = emb.count()
     val nlist = if (nlistArg > 0) nlistArg else Similarity.chooseNList(n)

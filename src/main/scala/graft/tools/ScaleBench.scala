@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity}
@@ -20,12 +20,7 @@ import graft.sources.Tables
 object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sf = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session
 
     def run(label: String, df: DataFrame): Unit = {
       // Execute THIS DataFrame's own QueryExecution (a write/count would
@@ -46,12 +41,11 @@ object ScaleBench {
       println(f"[scale] $label%-34s ${dt}%8.1f s  aqe_skew_split=$split final=$finalPlan")
       skewLines.filter(l => l.contains("skew=true") || l.toLowerCase.contains("skewed"))
         .take(2).foreach(l => println(s"[scale]   plan: ${l.trim.take(150)}"))
-      spark.catalog.clearCache()
       // drop the run's localCheckpoint blocks NOW, not at the next GC —
       // otherwise they squat on executor storage into the following run
       // (measured: run-order contamination made a capped run time 2x its
       // uncapped superset) — then GC so the ContextCleaner's queue drains
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      graft.Harness.release(spark, Set.empty)
       System.gc()
     }
 

@@ -90,6 +90,13 @@ class NhlModelsSpec extends SparkTestBase {
     assert(aug.getAs[String]("season_phase") === "Off Season")
   }
 
+  test("dimDate: spine is empty when runDate + 3 years falls before 2020-01-01") {
+    val rows = Seq("2001-09-01", "2016-12-31", "2017-01-01", "2024-10-11")
+      .map(day => day -> Models.dimDate(spark, day).count()).toMap
+    assert(rows === Map("2001-09-01" -> 0L, "2016-12-31" -> 0L,
+      "2017-01-01" -> 1L, "2024-10-11" -> 2841L))
+  }
+
   test("factTeamGameStats: union sides + multi-key join + player aggregates + pct") {
     val bosG1 = out.factTeamGameStats
       .filter($"game_id" === 2024020001L && $"team_abbrev" === "BOS").collect()(0)

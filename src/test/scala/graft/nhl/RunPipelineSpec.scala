@@ -26,7 +26,15 @@ class RunPipelineSpec extends SparkTestBase {
     }
 
     val silver = s"$root/silver"
-    RunPipeline.main(Array(root, silver, "2024-10-11"))
+    // main() runs on the caller's session as it finds it: its SQL confs
+    // must not leak into the suites that share this session afterwards
+    val partitionsKey = "spark.sql.shuffle.partitions"
+    val partitions = spark.conf.get(partitionsKey)
+    spark.conf.set(partitionsKey, "3")
+    try {
+      RunPipeline.main(Array(root, silver, "2024-10-11"))
+      assert(spark.conf.get(partitionsKey) === "3")
+    } finally spark.conf.set(partitionsKey, partitions)
 
     val fgr = spark.read.parquet(s"$silver/fact_game_results")
     assert(fgr.count() === 2) // FUT filtered
