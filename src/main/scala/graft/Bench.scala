@@ -5,7 +5,9 @@ package graft
   *
   * Usage: SPARK_GRAFT_SF_DIR=<sfDir> SPARK_GRAFT_RUNS=<n> runMain graft.Bench
   * [queryName ...] — with names given, only those queries are warmed and
-  * timed, and both lines are restricted to them (the single-query loop).
+  * timed, and both lines are restricted to them (the single-query loop);
+  * the `total_detail` line then goes to a file only when
+  * SPARK_GRAFT_DETAIL_OUT names one.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -132,11 +134,15 @@ object Bench {
     // ... persisted too: the driver's stdout tail truncates this line every
     // round (BENCH_r*.json parsed=null), and auditors then misread the
     // trailing "spread" map as seconds. SPARK_GRAFT_DETAIL_OUT overrides;
-    // best-effort so a read-only cwd can't fail the bench itself.
-    val detailOut = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailOut),
-      (detailLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
+    // a name-subset run writes only there (BENCH_DETAIL.json holds the
+    // full surface); best-effort so a read-only cwd can't fail the bench.
+    val detailOut = sys.env.get("SPARK_GRAFT_DETAIL_OUT")
+      .orElse(if (args.isEmpty) Some("BENCH_DETAIL.json") else None)
+    detailOut.foreach { out =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(out),
+        (detailLine + "\n").getBytes("UTF-8"))
+      catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
+    }
     // ... then a COMPACT final line: the driver keeps only the last ~2000
     // chars of stdout, and the full 100+-query map (~2800 chars) never fit —
     // every prior round's BENCH_r*.json carried parsed=null. The headline

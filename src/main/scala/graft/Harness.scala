@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import scala.util.control.NonFatal
 
 /** The one session config and the one prebuild / per-query release loop
@@ -82,13 +82,14 @@ object Harness {
     * `localCheckpoint` blocks, which otherwise squat on storage memory
     * until the ContextCleaner notices their GC'd references (multi-×
     * noise on later query times through GC churn). Each query builds a
-    * fresh DataFrame, so blocks born in one are dead after its action.
+    * fresh DataFrame, so blocks born in one are dead after its action;
+    * they go without `RDD.unpersist`'s per-RDD "was locally checkpointed"
+    * WARN (one stderr line per dropped block).
     */
   def release(spark: SparkSession, keep: Set[Int]): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep.contains(id)) rdd.unpersist(blocking = true)
-    }
+    (spark.sparkContext.getPersistentRDDs.keySet -- keep)
+      .foreach(GraftSqlBridge.unpersistRDD(spark, _))
   }
 
   /** The queries named on a command line, or every query when none is

@@ -42,14 +42,11 @@ object NhlPipeline {
           boxscoreBronze: DataFrame,
           pbpBronze: DataFrame,
           oddsBronze: DataFrame,
-          runDate: String,
-          persist: Boolean = true): NhlOutputs = {
-
-    def tbl(df: DataFrame): DataFrame = if (persist) df.persist() else df
+          runDate: String): NhlOutputs = {
 
     // staging (views)
     val stgGames = Models.stgGames(boxscoreBronze)
-    val stgPgs = tbl(Models.stgPlayerGameStats(boxscoreBronze)) // feeds 4 consumers
+    val stgPgs = Models.stgPlayerGameStats(boxscoreBronze).persist() // feeds 4 consumers
 
     // dims
     val dimTeam = Models.dimTeam(stgGames)
@@ -58,9 +55,9 @@ object NhlPipeline {
 
     // facts (tables)
     val factGameResults = Models.factGameResults(stgGames)
-    val factPgs = tbl(Models.factPlayerGameStats(stgPgs, dimPlayer))
+    val factPgs = Models.factPlayerGameStats(stgPgs, dimPlayer).persist()
     val factTgs = Models.factTeamGameStats(stgGames, stgPgs)
-    val factShots = tbl(Models.factShotEvents(pbpBronze))
+    val factShots = Models.factShotEvents(pbpBronze).persist()
 
     // window metrics (views over facts)
     val teamShotMetrics = Metrics.teamShotMetrics(factTgs)

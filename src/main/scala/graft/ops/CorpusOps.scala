@@ -72,12 +72,6 @@ object CorpusOps {
         (log(idfArg) * tfWeight).as("score"))
   }
 
-  /** Corpus bigram counts (every occurrence, not per-doc-distinct) — the
-    * n-gram language-model statistic behind perplexity-free quality
-    * baselines and corpus drift checks. Positions self-join on (doc,
-    * pos+1), so construction stays in whole-stage codegen (no higher-order
-    * lambdas); one aggregation shuffle on the bigram key.
-    */
   /** Top-k corpus vocabulary with the coverage curve: term frequency,
     * document frequency, and the cumulative share of all token occurrences
     * covered through each rank — the vocabulary-building pass of a
@@ -110,6 +104,12 @@ object CorpusOps {
         col("df"), (col("cum_tf") / col("total_tf")).as("cum_share"))
   }
 
+  /** Corpus bigram counts (every occurrence, not per-doc-distinct) — the
+    * n-gram language-model statistic behind perplexity-free quality
+    * baselines and corpus drift checks. Positions self-join on (doc,
+    * pos+1), so construction stays in whole-stage codegen (no higher-order
+    * lambdas); one aggregation shuffle on the bigram key.
+    */
   def bigramCounts(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val t = df.select(col(idCol).as("doc_id"),
       posexplode(TextOps.tokens(col(textCol))).as(Seq("pos", "w")))
@@ -614,30 +614,6 @@ object CorpusOps {
       .withColumn("shard_pos", row_number().over(w))
   }
 
-  /** Domain-targeted importance sampling — the data-selection step that
-    * upweights corpus documents resembling a target domain (DSIR-family,
-    * "Data Selection for Language Models via Importance Resampling",
-    * Xie et al. 2023, arXiv:2302.03169). The published method scores docs
-    * by a log-likelihood ratio of hashed-n-gram LMs; transcendentals are
-    * not bit-reproducible across engines (see [[bm25]]'s ln note), so this
-    * adaptation scores by INTEGER per-token votes: token w votes for a doc
-    * iff it is overrepresented in the target slice,
-    * `t_cnt(w) * C > c_cnt(w) * T` (exact int64 cross-multiplication of
-    * occurrence counts against total token masses — products stay under
-    * 2^63 up to ~3e9-token corpora per side; beyond that, cast the
-    * products to decimal). The doc's `target_share` = votes / n_tok is
-    * one IEEE divide of exact integers, the keep rate is the clamped
-    * linear ramp `(share - floor) * slope`, and acceptance compares
-    * against [[hashUniform]] — fully deterministic, no RNG, engine-exact.
-    *
-    * Shuffle plan at 100 TB: two token-keyed hash aggregations build the
-    * corpus/target count tables (map-side combined; vocabulary-sized
-    * output), the token stream joins them on the token key (AQE broadcasts
-    * when the vocab fits, sort-merge on the token key otherwise — cap the
-    * vocab by min-count to force the broadcast), the corpus-mass totals
-    * ride a 1-row broadcast, and one groupBy(doc) folds votes. The corpus
-    * itself shuffles once (the doc-keyed fold).
-    */
   /** Word-frequency table with each word split to its character symbols —
     * the starting state of BPE training. At 100 TB the corpus collapses to
     * its VOCABULARY here (one shuffle), and every BPE iteration after this
@@ -937,6 +913,30 @@ object CorpusOps {
         col("n_true").cast("double") / col("n_docs").cast("double"))
   }
 
+  /** Domain-targeted importance sampling — the data-selection step that
+    * upweights corpus documents resembling a target domain (DSIR-family,
+    * "Data Selection for Language Models via Importance Resampling",
+    * Xie et al. 2023, arXiv:2302.03169). The published method scores docs
+    * by a log-likelihood ratio of hashed-n-gram LMs; transcendentals are
+    * not bit-reproducible across engines (see [[bm25]]'s ln note), so this
+    * adaptation scores by INTEGER per-token votes: token w votes for a doc
+    * iff it is overrepresented in the target slice,
+    * `t_cnt(w) * C > c_cnt(w) * T` (exact int64 cross-multiplication of
+    * occurrence counts against total token masses — products stay under
+    * 2^63 up to ~3e9-token corpora per side; beyond that, cast the
+    * products to decimal). The doc's `target_share` = votes / n_tok is
+    * one IEEE divide of exact integers, the keep rate is the clamped
+    * linear ramp `(share - floor) * slope`, and acceptance compares
+    * against [[hashUniform]] — fully deterministic, no RNG, engine-exact.
+    *
+    * Shuffle plan at 100 TB: two token-keyed hash aggregations build the
+    * corpus/target count tables (map-side combined; vocabulary-sized
+    * output), the token stream joins them on the token key (AQE broadcasts
+    * when the vocab fits, sort-merge on the token key otherwise — cap the
+    * vocab by min-count to force the broadcast), the corpus-mass totals
+    * ride a 1-row broadcast, and one groupBy(doc) folds votes. The corpus
+    * itself shuffles once (the doc-keyed fold).
+    */
   def dsirSample(df: DataFrame, textCol: String, idCol: String,
                  sourceCol: String, targetSource: String,
                  floorShare: Double = 0.3, slope: Double = 2.5): DataFrame = {

@@ -53,6 +53,17 @@ object Dedup {
     shingleSets(df, textCol, idCol, n)
       .select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
 
+  /** (`id`, `pos`, `chunk`): each document's [[TextOps.chunkTokens]]
+    * windows of `size` tokens (`overlap` shared with the previous one),
+    * exploded with their positions; the document id `idCol` is renamed to
+    * `id`.
+    */
+  private def chunkFrame(df: DataFrame, textCol: String, idCol: String, size: Int,
+                         overlap: Int, id: String, pos: String, chunk: String): DataFrame =
+    df.select(col(idCol).as(id), TextOps.tokens(col(textCol)).as("toks"))
+      .select(col(id),
+        posexplode(TextOps.chunkTokens(col("toks"), size, overlap)).as(Seq(pos, chunk)))
+
   /** The candidate table of a banded / chunked self-join
     * ([[minhashLshPairs]], [[chunkNearDupPairs]], [[simhashPairs]]),
     * materialized once: both join sides read it, and without the cut each
@@ -60,12 +71,12 @@ object Dedup {
     * before-plan: the sigs exchange appeared twice, one copy per join
     * side).
     *
-    * Uncapped (`cap == Long.MaxValue`, the exact face): repartitioned +
-    * sorted on `keys` BEFORE the checkpoint, so that the self-join can
-    * run with no exchange and no sort on either side (r15). Under AQE the
-    * checkpoint's scan reports UnknownPartitioning: with broadcasts
-    * disabled at sf0.001 the final plans count the same shuffle stages
-    * with or without the repartition, so the saving is unconfirmed.
+    * Uncapped (`cap == Long.MaxValue`, the exact face): the frame is
+    * checkpointed as it is. A checkpoint does not keep a layout under
+    * AQE: its scan reports UnknownPartitioning(0), so the self-join plans
+    * the same exchanges and sorts whether or not the frame was
+    * repartitioned and sorted on `keys` before the cut (reproduction in
+    * ROADMAP, Direction D).
     *
     * Capped: buckets holding more than `cap` rows are dropped LOUDLY
     * (counted, one stderr line naming `label`, the bucket kind `keys.head`
@@ -86,11 +97,8 @@ object Dedup {
     */
   private def bucketed(frame: DataFrame, keys: Seq[String], cap: Long,
                        label: String): DataFrame =
-    if (cap == Long.MaxValue) {
-      frame.repartition(keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
-        .localCheckpoint(false)
-    } else {
+    if (cap == Long.MaxValue) frame.localCheckpoint(false)
+    else {
       val ck = frame.localCheckpoint(false)
       val hot = ck.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") > cap)
@@ -175,21 +183,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
-  /** Near-SUBSET duplicate pairs: containment C = |A∩B| / min(|A|,|B|) —
-    * the asymmetric overlap measure that catches a document embedded
-    * whole inside a larger one (quote-inclusion, article + wrapper
-    * boilerplate, truncated re-crawls), which symmetric Jaccard
-    * structurally under-scores: a doc fully contained in one 4× its size
-    * has J = 1/4 but C = 1. Corpus self-pair twin of the probe-directed
-    * [[containmentPairs]] (decontamination); both jaccard and containment
-    * are emitted so the `containment ≥ t > jaccard` rows — the pairs ONLY
-    * this operator finds — are visible in the output.
-    *
-    * Scale shape: identical to [[ngramJaccardPairs]] — the shared
-    * [[coOccurrencePairs]] inverted-index join bounded by `maxDocFreq`,
-    * then per-pair arithmetic; both scores are single IEEE ops on exact
-    * integers, so verdicts are engine-exact.
-    */
   /** Tail-head overlap pairs — shard-stitching detection: (a, b) where
     * document a's LAST `m` tokens equal document b's FIRST `m` tokens,
     * the signature of one logical document split across two crawl records
@@ -221,6 +214,21 @@ object Dedup {
       .select("id_a", "id_b", "boundary")
   }
 
+  /** Near-SUBSET duplicate pairs: containment C = |A∩B| / min(|A|,|B|) —
+    * the asymmetric overlap measure that catches a document embedded
+    * whole inside a larger one (quote-inclusion, article + wrapper
+    * boilerplate, truncated re-crawls), which symmetric Jaccard
+    * structurally under-scores: a doc fully contained in one 4× its size
+    * has J = 1/4 but C = 1. Corpus self-pair twin of the probe-directed
+    * [[containmentPairs]] (decontamination); both jaccard and containment
+    * are emitted so the `containment ≥ t > jaccard` rows — the pairs ONLY
+    * this operator finds — are visible in the output.
+    *
+    * Scale shape: identical to [[ngramJaccardPairs]] — the shared
+    * [[coOccurrencePairs]] inverted-index join bounded by `maxDocFreq`,
+    * then per-pair arithmetic; both scores are single IEEE ops on exact
+    * integers, so verdicts are engine-exact.
+    */
   def containmentSelfPairs(df: DataFrame, textCol: String, idCol: String,
                            n: Int = 3, threshold: Double = 0.8,
                            maxDocFreq: Long = Long.MaxValue): DataFrame =
@@ -267,10 +275,10 @@ object Dedup {
     // count IS the document frequency) instead of a separate aggregate
     // joined back — ONE pipeline and ONE checkpoint barrier where the r14
     // shape had the ix0 checkpoint plus a freq join re-executed per
-    // self-join side. The checkpoint lands AFTER the window: its blocks
-    // are shingle-partitioned AND shingle-sorted, localCheckpoint
-    // preserves both, so the self-join below needs NO exchange and NO
-    // sort on either side (r14: exchange+sort twice). Two slower
+    // self-join side. The checkpoint lands AFTER the window, so its blocks
+    // are shingle-partitioned and shingle-sorted, but its scan reports
+    // UnknownPartitioning under AQE: the self-join below still plans its
+    // own exchange and sort per side (see [[bucketed]]). Two slower
     // variants measured at sf0.1 and rejected: keeping the aggregate+
     // broadcast-join and checkpointing the repartitioned filtered index
     // (a SECOND barrier — 2.5 s vs 1.5 s on dd_ngram_jaccard), and the
@@ -346,8 +354,8 @@ object Dedup {
     * computed over the full ordered set (unique shingles occupy prefix
     * slots but generate no candidates), so frequency pruning does not
     * disturb the lemma.
-    */
-  /** `carry`: per-document columns of `df` that ride the (already
+    *
+    * `carry`: per-document columns of `df` that ride the (already
     * checkpointed) sets frame through the verify joins and emerge as
     * `<c>_a` / `<c>_b` on each pair — a caller that needs per-side
     * attributes (dd_overlap_matrix's source rollup) then pays ZERO extra
@@ -375,9 +383,10 @@ object Dedup {
     // sf0.1 and rejected — (a) dfreq as a shingle-partitioned window COUNT
     // (sorts the FULL index on shingle before the prefix cut: 2.5 s vs
     // 2.0 s on dd_ngram_prefix) and (b) checkpointing the repartitioned+
-    // sorted prefix so the self-join goes exchange-free (the extra
-    // materialization barrier outweighs re-running the cheap chain per
-    // side: 3.0 s). The dfreq aggregate broadcasts at vocabulary size and
+    // sorted prefix for the self-join (the extra materialization barrier
+    // outweighs re-running the cheap chain per side: 3.0 s; nor does a
+    // checkpoint keep that layout, see [[bucketed]]). The dfreq
+    // aggregate broadcasts at vocabulary size and
     // the double-executed chain reads the sets checkpoint, so the r14
     // shape stands.
     val prefix = ix0.join(docFreq, Seq("shingle"))
@@ -405,6 +414,13 @@ object Dedup {
     array((0 until k).map { i =>
       array_min(transform(sh, s => xxhash64(concat(s, lit(s"#$i")))))
     }: _*)
+
+  /** The production `maxBandFreq`/`maxChunkFreq` default: max(4·g_max,
+    * √(2P)) with residual legitimate cluster size g_max = 10³ (post-
+    * [[exactGroups]]) and per-bucket candidate-mass target P = 10⁷ pairs —
+    * see the [[minhashLshPairs]] sizing paragraph for the derivation.
+    */
+  val RecommendedMaxBandFreq: Long = 4500L
 
   /** MinHash + LSH near-dup pairs: signature → b bands of r slots → banded
     * self-join → verify candidates with true Jaccard. With k=32, b=8, r=4 a
@@ -441,13 +457,6 @@ object Dedup {
     * Setting `maxBandFreq` makes this call eager; see [[bucketed]] for the
     * cap path's evaluation semantics.
     */
-  /** The production `maxBandFreq`/`maxChunkFreq` default: max(4·g_max,
-    * √(2P)) with residual legitimate cluster size g_max = 10³ (post-
-    * [[exactGroups]]) and per-bucket candidate-mass target P = 10⁷ pairs —
-    * see the [[minhashLshPairs]] sizing paragraph for the derivation.
-    */
-  val RecommendedMaxBandFreq: Long = 4500L
-
   def minhashLshPairs(df: DataFrame, textCol: String, idCol: String,
                       n: Int = 3, k: Int = 32, bands: Int = 8,
                       threshold: Double = 0.8,
@@ -590,11 +599,7 @@ object Dedup {
                      minDocs: Int = 2,
                      maxDocFreq: Long = Long.MaxValue): DataFrame = {
     require(minDocs >= 2, s"minDocs=$minDocs: below 2 every chunk is its own dup group")
-    val chunks = df
-      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col("doc_id"),
-        posexplode(TextOps.chunkTokens(col("toks"), chunkSize, overlap))
-          .as(Seq("chunk_pos", "chunk")))
+    val chunks = chunkFrame(df, textCol, idCol, chunkSize, overlap, "doc_id", "chunk_pos", "chunk")
       .select(col("doc_id"), col("chunk_pos"), md5(col("chunk")).as("chunk_fp"))
     val groups = chunks.groupBy("chunk_fp")
       .agg(countDistinct(col("doc_id")).as("n_docs"), min(col("doc_id")).as("dup_group"))
@@ -625,11 +630,7 @@ object Dedup {
   def stripIntraDocRepeats(df: DataFrame, textCol: String, idCol: String,
                            blockSize: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val blocks = df
-      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col("doc_id"),
-        posexplode(TextOps.chunkTokens(col("toks"), blockSize, 0))
-          .as(Seq("pos", "block")))
+    val blocks = chunkFrame(df, textCol, idCol, blockSize, 0, "doc_id", "pos", "block")
     val firstPos = min(col("pos")).over(
       Window.partitionBy(col("doc_id"), md5(col("block"))))
     val docBlocks = count(lit(1)).over(Window.partitionBy(col("doc_id")))
@@ -670,11 +671,7 @@ object Dedup {
     val dups = chunkDupGroups(df, textCol, idCol, chunkSize, overlap = 0,
       minDocs = minDocs, maxDocFreq = maxDocFreq)
       .select(col("doc_id"), col("chunk_pos"))
-    val chunks = df
-      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col("doc_id"),
-        posexplode(TextOps.chunkTokens(col("toks"), chunkSize, 0))
-          .as(Seq("chunk_pos", "chunk")))
+    val chunks = chunkFrame(df, textCol, idCol, chunkSize, 0, "doc_id", "chunk_pos", "chunk")
     val kept = chunks.join(dups, Seq("doc_id", "chunk_pos"), "left_anti")
       .groupBy("doc_id")
       .agg(
@@ -730,11 +727,7 @@ object Dedup {
     // chunk shingle sets feed signature hashing AND both verification
     // joins; localCheckpoint for the same no-leak reason as
     // [[ngramJaccardPairs]]'s index
-    val chunks = df
-      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col("id"),
-        posexplode(TextOps.chunkTokens(col("toks"), chunkSize, 0))
-          .as(Seq("pos", "chunk")))
+    val chunks = chunkFrame(df, textCol, idCol, chunkSize, 0, "id", "pos", "chunk")
       .select(col("id"), col("pos"),
         TextOps.shinglesFromTokens(TextOps.tokens(col("chunk")), n).as("sh"))
       .localCheckpoint(false)
@@ -761,10 +754,6 @@ object Dedup {
       .localCheckpoint(false)
   }
 
-  /** 64-bit SimHash over the distinct token set (weight 1 per token): for
-    * each bit, majority vote of token-hash bits. Pure column expressions —
-    * 64 codegen'd subexpressions, no UDF.
-    */
   /** Sparse token-frequency cosine pairs via an inverted-index self-join —
     * the bag-of-words twin of [[ngramJaccardPairs]] (multiplicity-aware
     * where Jaccard is set-based; catches "same words, shuffled" near-dups
@@ -807,13 +796,7 @@ object Dedup {
     // per-document table — a doc-count-sized broadcast, which cannot
     // exist at 100 TB corpus scale (and locally cost an extra aggregate
     // subtree plus two join stages per execution)
-    val tfn = tf.join(norms, Seq("id"))
-    val a = tfn.select(col("id").as("id_a"), col("token"), col("tf").as("tf_a"),
-      col("nrm2").as("sz_a"))
-    val b = tfn.select(col("id").as("id_b"), col("token"), col("tf").as("tf_b"),
-      col("nrm2").as("sz_b"))
-    a.join(b, Seq("token"))
-      .filter(col("id_a") < col("id_b"))
+    selfPairs(tf.join(norms, Seq("id")), Seq("token"), "tf" -> "tf", "nrm2" -> "sz")
       .groupBy("id_a", "id_b")
       .agg(sum(col("tf_a") * col("tf_b")).as("num"),
         min(col("sz_a")).as("n2_a"), min(col("sz_b")).as("n2_b"))
@@ -944,6 +927,10 @@ object Dedup {
       .select("id_a", "id_b", "cosine")
   }
 
+  /** 64-bit SimHash over the distinct token set (weight 1 per token): for
+    * each bit, majority vote of token-hash bits. Pure column expressions —
+    * 64 codegen'd subexpressions, no UDF.
+    */
   def simhash(text: Column): Column = {
     val hashes = transform(array_distinct(TextOps.tokens(text)), t => xxhash64(t))
     val nTok = size(hashes)
@@ -1080,8 +1067,6 @@ object Dedup {
       labels = next.select("id", "comp")
       converged = changed == 0
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter changed=$changed")
     }
     // a truncated result is silently WRONG (labels only partially
     // propagated) — a 100 TB caller must not have to scrape driver logs to
@@ -1164,11 +1149,9 @@ object Dedup {
                    maxHamming: Int = 3,
                    maxChunkFreq: Long = Long.MaxValue): DataFrame = {
     // r15: the materialization point moves from the SimHash table to the
-    // CHUNKED table ([[bucketed]]: repartitioned + sorted on the chunk
-    // key), and the
-    // tokenize + 64-bit vote aggregate still runs exactly once per
-    // execution (it feeds only this frame, so its separate checkpoint
-    // was a redundant barrier).
+    // CHUNKED table ([[bucketed]]), and the tokenize + 64-bit vote
+    // aggregate still runs exactly once per execution (it feeds only this
+    // frame, so its separate checkpoint was a redundant barrier).
     val withSim = simhashTable(df, textCol, idCol)
     val chunked0 = withSim.select(col("id"), col("sim"),
       explode(array((0 until 4).map { c =>

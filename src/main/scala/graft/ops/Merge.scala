@@ -49,6 +49,22 @@ object Merge {
       .unionByName(latestDelta)
   }
 
+  /** The NULL field marker: exactly as wide as an md5 hex digest and
+    * containing non-hex characters, so it can never equal one.
+    */
+  val NullFieldMarker = "##NULL##NULL##NULL##NULL##NULL##"
+
+  /** The diff fingerprint of one row, as a column — md5 over the
+    * concatenated per-column md5s (see [[snapshotDiff]]'s determinism
+    * contract). Public so the streaming CDC twin
+    * ([[graft.streaming.Streaming.cdcAgainstBase]]) compares the SAME
+    * key a batch-built base index carries.
+    */
+  def rowFingerprint(trackCols: Seq[String]): Column =
+    md5(concat(
+      trackCols.map(c =>
+        coalesce(md5(col(c).cast("string")), lit(NullFieldMarker))): _*))
+
   /** Row-level snapshot diff (the CDC shape): classify every key of two
     * table snapshots as `added` / `removed` / `changed`, comparing rows by
     * an md5 fingerprint of the tracked columns instead of column-by-column
@@ -70,22 +86,6 @@ object Merge {
     * exact-cents longs do; raw doubles/timestamps should be normalized by
     * the caller first (see the s12 face).
     */
-  /** The NULL field marker: exactly as wide as an md5 hex digest and
-    * containing non-hex characters, so it can never equal one.
-    */
-  val NullFieldMarker = "##NULL##NULL##NULL##NULL##NULL##"
-
-  /** The diff fingerprint of one row, as a column — md5 over the
-    * concatenated per-column md5s (see [[snapshotDiff]]'s determinism
-    * contract). Public so the streaming CDC twin
-    * ([[graft.streaming.Streaming.cdcAgainstBase]]) compares the SAME
-    * key a batch-built base index carries.
-    */
-  def rowFingerprint(trackCols: Seq[String]): Column =
-    md5(concat(
-      trackCols.map(c =>
-        coalesce(md5(col(c).cast("string")), lit(NullFieldMarker))): _*))
-
   def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame,
                    keyCols: Seq[String], trackCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "snapshotDiff needs at least one key column")

@@ -39,6 +39,28 @@ object RuntimeFilter {
       GraftSqlBridge.expression(bloom),
       GraftSqlBridge.expression(xxhash64(key))))
 
+  /** Item estimate for the default sketch sizing, from Catalyst plan
+    * statistics. Clamped in BigInt BEFORE narrowing to Long: stats default
+    * `sizeInBytes` to `Long.MaxValue` when unknown, and joined plans
+    * multiply child sizes past it — a raw `.toLong` wraps negative and the
+    * `items * 10L` in [[bloomSemiJoin]] would silently collapse the sketch
+    * to the 64 Ki minimum, reintroducing the all-pass-through failure the
+    * stats sizing exists to prevent. Anything above bitsCap/10 items
+    * saturates the bits clamp anyway, so capping here loses nothing.
+    * `ScaleOpsSpec` pins the unknown-stats and joined-plan cases.
+    */
+  private[graft] def estimatedBuildItems(build: DataFrame): Long = {
+    val plan = build.queryExecution.optimizedPlan
+    val stats = plan.stats
+    val itemsCap = BigInt(64L * 1024 * 1024 / 10)
+    val estimated = stats.rowCount.filter(_ > 0).getOrElse {
+      val rowWidth =
+        math.max(8, plan.schema.map(_.dataType.defaultSize).sum)
+      stats.sizeInBytes / rowWidth
+    }
+    estimated.min(itemsCap).max(BigInt(64)).toLong
+  }
+
   /** Semi join with a bloom prefilter: output ≡ `probe LEFT SEMI JOIN
     * build` exactly — the bloom pass may keep false positives (never drops
     * a true match: no false negatives by construction), and the exact semi
@@ -62,28 +84,6 @@ object RuntimeFilter {
     * all-pass-through — still exact, but the shuffle savings vanish.)
     * Pass explicit values when the caller knows the true cardinality.
     */
-  /** Item estimate for the default sketch sizing, from Catalyst plan
-    * statistics. Clamped in BigInt BEFORE narrowing to Long: stats default
-    * `sizeInBytes` to `Long.MaxValue` when unknown, and joined plans
-    * multiply child sizes past it — a raw `.toLong` wraps negative and the
-    * `items * 10L` in [[bloomSemiJoin]] would silently collapse the sketch
-    * to the 64 Ki minimum, reintroducing the all-pass-through failure the
-    * stats sizing exists to prevent. Anything above bitsCap/10 items
-    * saturates the bits clamp anyway, so capping here loses nothing.
-    * `ScaleOpsSpec` pins the unknown-stats and joined-plan cases.
-    */
-  private[graft] def estimatedBuildItems(build: DataFrame): Long = {
-    val plan = build.queryExecution.optimizedPlan
-    val stats = plan.stats
-    val itemsCap = BigInt(64L * 1024 * 1024 / 10)
-    val estimated = stats.rowCount.filter(_ > 0).getOrElse {
-      val rowWidth =
-        math.max(8, plan.schema.map(_.dataType.defaultSize).sum)
-      stats.sizeInBytes / rowWidth
-    }
-    estimated.min(itemsCap).max(BigInt(64)).toLong
-  }
-
   def bloomSemiJoin(probe: DataFrame, probeKey: String,
                     build: DataFrame, buildKey: String,
                     expectedItems: Long = -1L,

@@ -100,6 +100,54 @@ object Similarity {
     if (by.isEmpty) df.repartition(n) else df.repartition(n, by: _*)
   }
 
+  /** The `k` best rows per `query_id` by `score` descending, ties to the
+    * lower `neighbor_id`, numbered 1..k in column `rank`: the one ranked
+    * top-k of every search here.
+    */
+  private def topK(df: DataFrame, score: String, rank: String, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(score).desc, col("neighbor_id").asc)
+    df.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** The exact-cosine tail of a candidate-pair frame carrying (query_id,
+    * qv, qn) and (neighbor_id, cv, cn): self-matches dropped, cosine of the
+    * precomputed norms, top-k → (query_id, neighbor_id, rank, cos).
+    */
+  private def exactTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+    topK(scored, "cos", "rank", k).select("query_id", "neighbor_id", "rank", "cos")
+  }
+
+  /** The IVF-PQ tail: probe rows (query_id, qv, cid) meet the encoded
+    * lists (neighbor_id, cid, rv), the asymmetric ⟨qv, rv⟩ keeps the top
+    * `k * oversample` survivors per query (self-matches dropped), and only
+    * those are re-ranked by the exact ⟨qv, v⟩ against `full` (vec_id, v),
+    * both sides unit-normalized → (query_id, neighbor_id, rank, cos).
+    */
+  private def adcTopK(probes: DataFrame, encoded: DataFrame, full: DataFrame, k: Int,
+                      oversample: Int): DataFrame = {
+    val approx = probes.join(encoded, Seq("cid"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("approx", dot(col("qv"), col("rv")))
+    val reranked = topK(approx, "approx", "arank", k * oversample)
+      .select("query_id", "qv", "neighbor_id")
+      .join(full.select(col("vec_id").as("neighbor_id"), col("v").as("nv")), Seq("neighbor_id"))
+      .withColumn("cos", dot(col("qv"), col("nv")))
+    topK(reranked, "cos", "rank", k).select("query_id", "neighbor_id", "rank", "cos")
+  }
+
+  /** Probe rows of a prebuilt IVF index: queries (vec_id, v), redistributed
+    * ([[fanOut]]: the probe explode multiplies them), each ranks the
+    * broadcast [[centroidRow]] and yields one (query_id, qv, `extra`…, cid)
+    * row per probed list.
+    */
+  private def probeRows(q: DataFrame, centroids: DataFrame, nprobe: Int,
+                        extra: Column*): DataFrame =
+    fanOut(q).crossJoin(centroidRow(centroids))
+      .select(Seq(col("vec_id").as("query_id"), col("v").as("qv")) ++ extra :+
+        explode(probeList(col("v"), nprobe)).as("cid"): _*)
+
   /** Exact top-k neighbors of each query vector by brute force.
     *
     * The corpus side is broadcast (queries stream past it in parallel — no
@@ -109,14 +157,7 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = fanOut(withNorm(queries, "query_id", "qv", "qn"))
     val c = broadcast(withNorm(corpus, "neighbor_id", "cv", "cn"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    q.crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    exactTopK(q.crossJoin(c), k)
   }
 
   /** Deterministic random hyperplanes (seeded driver-side, shipped as
@@ -208,19 +249,11 @@ object Similarity {
     * bucket(s)) join corpus vectors on the bucket key, score exactly, and
     * rank within query.
     */
-  private def topKInBuckets(q: DataFrame, c: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
+  private def topKInBuckets(q: DataFrame, c: DataFrame, k: Int): DataFrame =
     // keyed fan-out: if the corpus side broadcasts, the exchange is what
     // parallelizes candidate scoring; if it doesn't, HashPartitioning on
     // the join key satisfies the shuffle join's requirement — no 2nd shuffle
-    fanOut(q, col("bucket")).join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
+    exactTopK(fanOut(q, col("bucket")).join(c, Seq("bucket")), k)
 
   /** Corpus-side projection of a bucketed frame that already carries its
     * norm as `nrm` (computed once, next to the bucket hash).
@@ -404,13 +437,7 @@ object Similarity {
       col("vn").as("cn"), col("probe")(0).as("cid"))
     val probes = ranked.select(col("vec_id").as("query_id"), col("v").as("qv"),
       col("vn").as("qn"), explode(col("probe")).as("cid"))
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    probes.join(corpus, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    exactTopK(probes.join(corpus, Seq("cid")), k)
   }
 
   /** Build a persistable IVF index ONCE: returns (centroids, corpus), two
@@ -454,21 +481,12 @@ object Similarity {
   def ivfQueryIndex(centroids: DataFrame, corpus: DataFrame, queries: DataFrame,
                     k: Int, nprobe: Int = 6): DataFrame = {
     val q = queries.select(col("vec_id"), col("embedding").cast("array<float>").as("v"))
-    // top-nprobe centroids per query: the kernel's probe list over the
-    // broadcast centroid row, exploded — (−score asc, cid asc), the order
-    // of ivfTopK's probe lists
-    val probes = fanOut(q).crossJoin(centroidRow(centroids))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), l2Norm(col("v")).as("qn"),
-        explode(probeList(col("v"), nprobe)).as("cid"))
+    // top-nprobe centroids per query, (−score asc, cid asc): the order of
+    // ivfTopK's probe lists
+    val probes = probeRows(q, centroids, nprobe, l2Norm(col("v")).as("qn"))
     val corp = corpus.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
       col("vn").as("cn"), col("cid"))
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    probes.join(corp, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    exactTopK(probes.join(corp, Seq("cid")), k)
   }
 
   /** Product-quantization codebooks (Jégou et al., "Product Quantization
@@ -619,23 +637,8 @@ object Similarity {
       col("probe")(0).as("cid"), col("rv"))
     val probes = ranked.select(col("vec_id").as("query_id"), col("v").as("qv"),
       explode(col("probe")).as("cid"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val survivors = probes.join(corpus, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", dot(col("qv"), col("rv")))
-      .withColumn("arank", row_number().over(wApprox))
-      .filter(col("arank") <= k * oversample)
-      .select("query_id", "qv", "neighbor_id")
     // exact re-rank: fetch full-precision vectors for survivors only
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    survivors
-      .join(vecs.select(col("vec_id").as("neighbor_id"), col("v").as("nv")),
-        Seq("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    adcTopK(probes, corpus, vecs, k, oversample)
   }
 
   /** The two trained quantizers of an IVF-PQ index over `vecs` (=
@@ -687,29 +690,10 @@ object Similarity {
   def ivfPqQueryIndex(centroids: DataFrame, encoded: DataFrame,
                       fullVecs: DataFrame, queries: DataFrame, k: Int,
                       nprobe: Int, oversample: Int = 8): DataFrame = {
-    val q = normalized(queries)
     // the probe lists of [[ivfQueryIndex]], same kernel and order
-    val probes = fanOut(q).crossJoin(centroidRow(centroids))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        explode(probeList(col("v"), nprobe)).as("cid"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val survivors = probes
-      .join(encoded.select(col("vec_id").as("neighbor_id"), col("cid"), col("rv")),
-        Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", dot(col("qv"), col("rv")))
-      .withColumn("arank", row_number().over(wApprox))
-      .filter(col("arank") <= k * oversample)
-      .select("query_id", "qv", "neighbor_id")
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    survivors
-      .join(normalized(fullVecs).select(col("vec_id").as("neighbor_id"), col("v").as("nv")),
-        Seq("neighbor_id"))
-      .withColumn("cos", dot(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    adcTopK(probeRows(normalized(queries), centroids, nprobe),
+      encoded.select(col("vec_id").as("neighbor_id"), col("cid"), col("rv")),
+      normalized(fullVecs), k, oversample)
   }
 
   /** Int8-quantized ANN top-k with exact re-rank — the memory-bandwidth
@@ -749,11 +733,7 @@ object Similarity {
       col("q8").as("qa"), col("f").as("fa"), col("nrm").as("na_"), col("bucket")), col("bucket"))
     val b = prep.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
       col("q8").as("qb"), col("f").as("fb"), col("nrm").as("nb_"), col("bucket"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val wExact = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    a.join(b, Seq("bucket"))
+    val approx = a.join(b, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       // exact BIGINT dot through the codegen'd DotL kernel — this runs
       // per bucket-local CANDIDATE PAIR (the hottest integer loop in the
@@ -762,12 +742,9 @@ object Similarity {
       // unreachable overflow at |q8| ≤ 127)
       .withColumn("dq", kernel(DotL, col("qa"), col("qb")))
       .withColumn("approx", col("dq").cast("double") * col("fa") * col("fb"))
-      .withColumn("arank", row_number().over(wApprox))
-      .filter(col("arank") <= k * oversample)
+    val reranked = topK(approx, "approx", "arank", k * oversample)
       .withColumn("cos", dot(col("qe"), col("ne")) / (col("na_") * col("nb_")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    topK(reranked, "cos", "rank", k).select("query_id", "neighbor_id", "rank", "cos")
   }
 
   /** SemDeDup-style semantic dedup survivor set: the LSH buckets act as the
@@ -885,31 +862,24 @@ object Similarity {
     */
   def cosineDupPairs(df: DataFrame, threshold: Double,
                      planes: Array[Array[Double]] = Array.empty): DataFrame = {
-    if (planes.isEmpty) {
+    val pairs = if (planes.isEmpty) {
       // checkpointed: both cross-join sides read the normed table — each
       // previously re-ran the scan + norm
       val src = withNorm(df, "vec_id", "v", "n_").localCheckpoint(false)
       val a = fanOut(src.select(col("vec_id").as("id_a"), col("v").as("va"),
         col("n_").as("na_")))
-      val b = broadcast(src.select(col("vec_id").as("id_b"), col("v").as("vb"),
-        col("n_").as("nb_")))
-      a.crossJoin(b)
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("cos", dot(col("va"), col("vb")) / (col("na_") * col("nb_")))
-        .filter(col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
+      a.crossJoin(broadcast(src.select(col("vec_id").as("id_b"), col("v").as("vb"),
+        col("n_").as("nb_"))))
     } else {
       // checkpointed: both bucket-join sides read the bucketed+normed table
       val src = bucketedWithNorm(df, planes)
-      val a = src.select(col("vec_id").as("id_a"), col("embedding").as("va"),
-        col("nrm").as("na_"), col("bucket"))
-      val b = src.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
-        col("nrm").as("nb_"), col("bucket"))
-      fanOut(a, col("bucket")).join(b, Seq("bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("cos", dot(col("va"), col("vb")) / (col("na_") * col("nb_")))
-        .filter(col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
+      def side(s: String) = src.select(col("vec_id").as(s"id_$s"), col("embedding").as(s"v$s"),
+        col("nrm").as(s"n${s}_"), col("bucket"))
+      fanOut(side("a"), col("bucket")).join(side("b"), Seq("bucket"))
     }
+    pairs.filter(col("id_a") < col("id_b"))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na_") * col("nb_")))
+      .filter(col("cos") >= threshold)
+      .select("id_a", "id_b", "cos")
   }
 }

@@ -226,10 +226,6 @@ object TextOps {
       coalesce(array_max(cnts), lit(0L)).as("top_char_cnt"))
   }
 
-  /** Name of the first cascade rule that fires, null when the doc passes —
-    * "first" in the declared rule order, which makes reject accounting
-    * deterministic regardless of evaluation order.
-    */
   /** Canonical URL — the crawl-dedup key: the same logical page arrives
     * under many raw spellings (case-shifted scheme/host, explicit default
     * port, `www.` prefix, shuffled query params, tracking params,
@@ -261,6 +257,10 @@ object TextOps {
       when(params =!= "", concat(lit("?"), params)).otherwise(lit("")))
   }
 
+  /** Name of the first cascade rule that fires, null when the doc passes —
+    * "first" in the declared rule order, which makes reject accounting
+    * deterministic regardless of evaluation order.
+    */
   def firstReject(rules: Seq[(String, Column)]): Column =
     rules.foldRight(lit(null).cast("string")) {
       case ((name, cond), acc) => when(cond, lit(name)).otherwise(acc)

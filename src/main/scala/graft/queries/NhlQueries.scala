@@ -76,14 +76,6 @@ object NhlQueries extends QueryPack {
   private def fse(s: org.apache.spark.sql.SparkSession, dir: String) =
     Silver("fse", dir)(Models.factShotEvents(Synthetic.bronzePbp(s, dir)))
 
-  /** Eagerly build every Silver materialization for `dir` — the dbt-table
-    * build step made explicit. `Bench` calls this BEFORE its timed runs so
-    * the one-time bronze→silver build cost stops landing in whichever
-    * nhl_* query touches a frame first (r12 committed spreads charged
-    * 67–101 s of build to `nhl_fact_team_game_stats`' first run). Each
-    * `Silver` build localCheckpoints eagerly, so touching the frames IS
-    * the materialization; queries still run their own model logic on top.
-    */
   /** The materialized silver frames, for measurement tools (VProfile) —
     * same instances the queries read, so a stage timed on these measures
     * exactly what the corresponding query stage pays.
@@ -95,6 +87,14 @@ object NhlQueries extends QueryPack {
   private[graft] def silverXwalk(s: org.apache.spark.sql.SparkSession, dir: String) =
     xwalk(s, dir)
 
+  /** Eagerly build every Silver materialization for `dir` — the dbt-table
+    * build step made explicit. `Harness.prebuild` calls this BEFORE any
+    * timed run so the one-time bronze→silver build cost stops landing in
+    * whichever nhl_* query touches a frame first (r12 committed spreads
+    * charged 67–101 s of build to `nhl_fact_team_game_stats`' first run). Each
+    * `Silver` build localCheckpoints eagerly, so touching the frames IS
+    * the materialization; queries still run their own model logic on top.
+    */
   def materializeSilver(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     stgGames(s, dir); stgPlayers(s, dir); fpgs(s, dir); ftgs(s, dir)
     stgOdds(s, dir); stgOdds50(s, dir); xwalk(s, dir); v2(s, dir); fse(s, dir)

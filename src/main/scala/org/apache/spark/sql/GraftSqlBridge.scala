@@ -18,6 +18,14 @@ object GraftSqlBridge {
   def divideByZero(): ArithmeticException =
     errors.QueryExecutionErrors.divideByZeroError(null)
 
+  /** Drop RDD `id`'s blocks, blocking, through `SparkContext.unpersistRDD`
+    * (`private[spark]`): what `RDD.unpersist` does, without the WARN that
+    * wrapper logs for every locally checkpointed RDD. The RDD object keeps
+    * its storage level, so call it only for RDDs no live frame reads again.
+    */
+  def unpersistRDD(spark: SparkSession, id: Int): Unit =
+    spark.sparkContext.unpersistRDD(id, blocking = true)
+
   /** A 1-row/1-column DataFrame as a scalar-subquery Column — how
     * Catalyst's own `InjectRuntimeFilter` feeds a bloom sketch to
     * `might_contain` (which requires a constant or scalar subquery, not a

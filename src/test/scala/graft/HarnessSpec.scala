@@ -5,6 +5,32 @@ package graft
   */
 class HarnessSpec extends SparkTestBase {
 
+  /** The messages of every log4j2 event at WARN or above logged while
+    * `body` runs.
+    */
+  private def logged(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("harness-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   test("release unpersists every localCheckpointed RDD outside keep, kept ones stay readable") {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // earlier suites' blocks are in keep too: this session is shared
@@ -17,7 +43,8 @@ class HarnessSpec extends SparkTestBase {
     val born = persisted -- keep
     assert(keptIds.size === 1 && born.size === dropped.size)
 
-    Harness.release(spark, keep)
+    val warnings = logged(Harness.release(spark, keep))
+    assert(!warnings.exists(_.contains("was locally checkpointed")), warnings.mkString("\n"))
 
     val left = persisted
     assert((left intersect born).isEmpty)

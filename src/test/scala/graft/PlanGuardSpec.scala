@@ -84,9 +84,10 @@ class PlanGuardSpec extends SparkTestBase {
     // the count at which these plans stand: at sf0.001 AQE broadcasts the
     // band/chunk self-join and the verify joins, and the one shuffle left
     // is the candidate-pair distinct. An added exchange anywhere on the
-    // candidate or verify path shows up as a second stage. (The pin does
-    // not see whether the candidate table is pre-partitioned: the
-    // checkpoint scan reports UnknownPartitioning either way.)
+    // candidate or verify path shows up as a second stage. (The candidate
+    // table is checkpointed unpartitioned: a checkpoint scan reports
+    // UnknownPartitioning, so no layout made before the cut reaches this
+    // plan.)
     Seq("dd_minhash_lsh", "dd_chunk_neardup", "dd_simhash").foreach { n =>
       val plan = finalQe(n).executedPlan
       val exchanges = countShuffleStages(plan)

@@ -15,7 +15,7 @@ class NhlModelsSpec extends SparkTestBase {
     NhlFixtures.boxscoreBronze(spark),
     NhlFixtures.pbpBronze(spark),
     NhlFixtures.oddsBronze(spark),
-    runDate = "2024-10-11", persist = false)
+    runDate = "2024-10-11")
 
   test("stgGames: latest snapshot wins (W1) — g1 shows the final 4-2, not the partial") {
     val g1 = out.stgGames.filter($"game_id" === 2024020001L).collect()

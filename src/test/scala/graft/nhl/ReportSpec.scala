@@ -13,7 +13,7 @@ class ReportSpec extends SparkTestBase {
     NhlFixtures.boxscoreBronze(spark),
     NhlFixtures.pbpBronze(spark),
     NhlFixtures.oddsBronze(spark),
-    runDate = "2024-10-11", persist = false)
+    runDate = "2024-10-11")
 
   test("byLineBucket groups settled props into the rpt:50-57 buckets") {
     val cuts = Props.Report.byLineBucket(out.factPlayerSogPropsV2).collect()
